@@ -299,22 +299,21 @@ def main() -> None:
         return json.dumps(obj, separators=(",", ":"))
 
     ext = [n for n in HEADLINE_EXT if n in per_query]
+    n_ext = len(ext)
     base = {n: per_query[n] for n in HEADLINE if n in per_query}
     while True:
         headline = dict(base)
         headline.update({n: per_query[n] for n in ext})
         line["queries"] = headline
-        if len(ext) < sum(1 for n in HEADLINE_EXT if n in per_query):
-            line["queries_truncated"] = (
-                sum(1 for n in HEADLINE_EXT if n in per_query) - len(ext)
-            )
+        if len(ext) < n_ext:
+            line["queries_truncated"] = n_ext - len(ext)
         out = dumps(line)
         if len(out) <= 1900 or not ext:
             break
         ext = ext[:-1]
     if len(out) > 1900:
         line["queries"] = {}
-        line["queries_truncated"] = len(base)
+        line["queries_truncated"] = len(base) + n_ext
         out = dumps(line)
     print(out)
     spark.stop()

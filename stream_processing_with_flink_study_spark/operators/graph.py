@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import conf_override
+
 
 # Size gate for the sequential union-find tail: symmetrized edge lists
 # at or under this row count (≈500k undirected edges, ~16 MB as two
@@ -35,6 +37,15 @@ from pyspark.sql import functions as F
 # count over an already-checkpointed frame.  Same hybrid-tail pattern
 # (and a similar bound) as ``boruvka_mst``.
 LOCAL_CC_SYM_LIMIT = 1_000_000
+
+# Conf for materializing a lazily chained damped iteration (pagerank,
+# katz): AQE off, and since each round's broadcast is built from the
+# whole multi-round prefix, the 300 s broadcast-future timeout is lifted
+# to an hour — large, but never infinite.
+CHAINED_ITER_CONF = {
+    "spark.sql.adaptive.enabled": "false",
+    "spark.sql.broadcastTimeout": "3600",
+}
 
 
 def connected_components(
@@ -268,13 +279,6 @@ def pagerank(
             .otherwise(F.lit(0.0))
             .alias("rank"),
         )
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_bt = spark.conf.get("spark.sql.broadcastTimeout")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # chained execution builds each round's broadcast from its whole
-    # multi-round prefix — lift the 300 s broadcast-future timeout the
-    # old per-round materialization never strained (round-12 advice)
-    spark.conf.set("spark.sql.broadcastTimeout", "-1")
     try:
         # the rank vector is referenced exactly ONCE per round (the
         # join), so the whole iteration chains lazily — one linear
@@ -306,10 +310,9 @@ def pagerank(
             )
         # one materialization pins the result so multi-action callers
         # never re-run the chain (and lineage is truncated, as before)
-        ranks = ranks.localCheckpoint()
+        with conf_override(spark, CHAINED_ITER_CONF):
+            ranks = ranks.localCheckpoint()
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.broadcastTimeout", prev_bt)
         fedges.unpersist()
     return ranks
 
@@ -470,32 +473,30 @@ def sssp(
     n_edges = e.count()
     use_broadcast = n_edges <= broadcast_threshold
     dist = spark.createDataFrame([(source, 0.0)], "id long, dist double")
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        for _ in range(rounds):
-            rhs = F.broadcast(dist) if use_broadcast else dist.hint(
-                "shuffle_hash"
-            )
-            relaxed = (
-                e.join(rhs, e[src] == dist.id)
-                .select(
-                    F.col(dst).alias("id"),
-                    (F.col("dist") + F.col(cost)).alias("dist"),
+        with conf_override(spark, {"spark.sql.adaptive.enabled": "false"}):
+            for _ in range(rounds):
+                rhs = F.broadcast(dist) if use_broadcast else dist.hint(
+                    "shuffle_hash"
                 )
-            )
-            # the frontier is referenced TWICE per round (join + union)
-            # so each round must materialize — but ONE localCheckpoint
-            # is one driver barrier where persist()+count() was two
-            # (round-12; per-round shuffle volume unchanged)
-            dist = (
-                dist.unionByName(relaxed)
-                .groupBy("id")
-                .agg(F.min("dist").alias("dist"))
-                .localCheckpoint()
-            )
+                relaxed = (
+                    e.join(rhs, e[src] == dist.id)
+                    .select(
+                        F.col(dst).alias("id"),
+                        (F.col("dist") + F.col(cost)).alias("dist"),
+                    )
+                )
+                # the frontier is referenced TWICE per round (join + union)
+                # so each round must materialize — but ONE localCheckpoint
+                # is one driver barrier where persist()+count() would be
+                # two (per-round shuffle volume is the same either way)
+                dist = (
+                    dist.unionByName(relaxed)
+                    .groupBy("id")
+                    .agg(F.min("dist").alias("dist"))
+                    .localCheckpoint()
+                )
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         e.unpersist()
     return dist
 
@@ -914,11 +915,6 @@ def katz_centrality(
     n_nodes = nodes.count()
     use_broadcast = n_nodes <= broadcast_threshold
     scores = nodes.select("id", F.lit(0.0).alias("score"))
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_bt = spark.conf.get("spark.sql.broadcastTimeout")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # same chained-broadcast timeout lift as pagerank (round-12 advice)
-    spark.conf.set("spark.sql.broadcastTimeout", "-1")
     try:
         # score vector referenced once per round → lazy-chain the
         # rounds and materialize ONCE (the pagerank round-12 rework:
@@ -939,9 +935,8 @@ def katz_centrality(
                 F.col("dst").alias("id"),
                 (F.lit(beta) + F.lit(alpha) * F.col("acc")).alias("score"),
             )
-        scores = scores.localCheckpoint()
+        with conf_override(spark, CHAINED_ITER_CONF):
+            scores = scores.localCheckpoint()
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.broadcastTimeout", prev_bt)
         fedges.unpersist()
     return scores

@@ -19,6 +19,7 @@ from pyspark.sql.window import Window
 
 from ..functions import dedup, similarity, text
 from ..operators.graph import connected_components
+from ..session import conf_override
 from ..sources import load_table
 from .registry import query
 
@@ -2199,14 +2200,9 @@ def streaming_scd2_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = memory_batches_stream(
         spark, batches, src_dir.path, files_per_trigger=1
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         with scratch_dir("ck_scd2_stream_") as ck:
             got = run_available_now(scd2_version_resolve(sdf), ck, "update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     return (
         got.groupBy(F.col("version").alias("profile_version"))
         .agg(

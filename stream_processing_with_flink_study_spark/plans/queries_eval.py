@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import conf_override
 from ..sources import load_table
 from .registry import query
 
@@ -820,14 +821,9 @@ def streaming_drawdown_yearly(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = memory_batches_stream(
         spark, batches, src_dir.path, files_per_trigger=1
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         with scratch_dir("ck_dd_stream_") as ck:
             got = run_available_now(drawdown_partials(sdf), ck, "update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     return got.groupBy("yr").agg(
         F.max("n_days").cast("long").alias("n_days"),
         F.max("peak_c").cast("long").alias("peak_c"),

@@ -11,6 +11,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import conf_override
 from ..sources import load_table
 from .registry import query
 
@@ -642,14 +643,9 @@ def streaming_session_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint overhead; at this key cardinality 8 state partitions
     # beat 32 (the partition count is pinned into the NEW checkpoint at
     # first start, so this only affects this query's store)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         with scratch_dir("ck_sess_timer_") as ck:
             got = run_available_now(out, ck, "append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     return got.filter(F.col("id") != "_flush")
 
 

@@ -882,13 +882,6 @@ def graph_robustness_attack(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from concurrent.futures import ThreadPoolExecutor
 
-    # INVARIANT (round-12 advice): every operator `scenario` routes
-    # through must not mutate session conf — the threads share one
-    # SparkSession, so a try/finally conf toggle (pagerank, sssp, katz,
-    # boruvka all do this) would race across scenarios.  Today only
-    # connected_components runs here, and it toggles nothing; route any
-    # conf-toggling operator through per-thread spark.newSession()
-    # clones instead.
     with ThreadPoolExecutor(max_workers=len(_ATTACK_SHARES)) as pool:
         rows = list(pool.map(scenario, _ATTACK_SHARES))
     return spark.createDataFrame(

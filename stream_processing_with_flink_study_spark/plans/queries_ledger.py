@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import conf_override
 from ..sources import load_table
 from .registry import query
 
@@ -566,16 +567,11 @@ def streaming_lindley_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = memory_batches_stream(
         spark, batches, src_dir.path, files_per_trigger=1
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         with scratch_dir("ck_lindley_stream_") as ck:
             got = run_available_now(
                 lindley_balance_partials(sdf), ck, "update"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     return (
         got.groupBy("user_id")
         .agg(
@@ -651,14 +647,9 @@ def streaming_cusum_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = memory_batches_stream(
         spark, batches, src_dir.path, files_per_trigger=1
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         with scratch_dir("ck_cusum_stream_") as ck:
             got = run_available_now(cusum_partials(sdf), ck, "update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     s = got.join(F.broadcast(p), "user_id").select(
         "user_id",
         "n",

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text
+from ..session import conf_override
 from ..sources import load_table
 from .registry import query
 
@@ -699,14 +700,9 @@ def streaming_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_dir.path,
         files_per_trigger=1,
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         with scratch_dir("ck_markov_stream_") as ck:
             got = run_available_now(transition_counts(sdf), ck, "update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     counts = got.groupBy("prev_t", "next_t").agg(
         F.sum("delta").cast("long").alias("cnt")
     )
@@ -1007,14 +1003,9 @@ def streaming_gap_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = memory_batches_stream(
         spark, batches, src_dir.path, files_per_trigger=1
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         with scratch_dir("ck_gap_stream_") as ck:
             got = run_available_now(gap_deltas(sdf), ck, "update")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     return (
         got.groupBy("user_id")
         .agg(

@@ -571,11 +571,9 @@ def udtf_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
     # Arrow-batch the UDTF exchange (plans ArrowEvalPythonUDTF, not the
-    # row-serialized BatchEvalPythonUDTF); runtime conf so it also holds
-    # under the driver's vanilla session
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-
-    @udtf(returnType="term: string, cnt: int")
+    # row-serialized BatchEvalPythonUDTF) per UDTF, so it holds under any
+    # session without touching session conf
+    @udtf(returnType="term: string, cnt: int", useArrow=True)
     class TokenCounts:
         def eval(self, text: str):
             toks = re.split(r"\s+", text.strip().lower())

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..session import conf_override
 from ..sources import load_table
 from .registry import query
 
@@ -528,16 +529,11 @@ def streaming_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = memory_batches_stream(
         spark, batches, src_dir.path, files_per_trigger=1
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "4"}):
         with scratch_dir("ck_croston_stream_") as ck:
             got = run_available_now(
                 croston_partials(sdf, alpha=0.2), ck, "update"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     agg = got.groupBy("idx").agg(
         F.max("day_ms").alias("day_ms"),
         F.max("y").alias("y"),
@@ -701,9 +697,7 @@ def streaming_rate_limiter(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = memory_batches_stream(
         spark, batches, src_dir.path, files_per_trigger=1
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "4"}):
         with scratch_dir("ck_rate_limiter_stream_") as ck:
             got = run_available_now(
                 token_bucket_partials(
@@ -712,9 +706,6 @@ def streaming_rate_limiter(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ck,
                 "update",
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     return (
         got.groupBy("user_id")
         .agg(
@@ -1417,18 +1408,13 @@ def streaming_kalman_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = memory_batches_stream(
         spark, batches, src_dir.path, files_per_trigger=1
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "4"}):
         with scratch_dir("ck_kalman_stream_") as ck:
             got = run_available_now(
                 kalman_partials(sdf, q_var=KALMAN_Q, r_var=KALMAN_R),
                 ck,
                 "update",
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     return got.select(
         "idx",
         "month_ms",
@@ -2022,9 +2008,7 @@ def streaming_elo_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = memory_batches_stream(
         spark, batches, src_dir.path, files_per_trigger=1
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "4"}):
         with scratch_dir("ck_elo_stream_") as ck:
             got = run_available_now(
                 elo_partials(
@@ -2036,9 +2020,6 @@ def streaming_elo_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ck,
                 "update",
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     final = got.groupBy("player_c").agg(
         F.max_by(
             F.struct("rating", "n_matches", "n_wins", "steps"), F.col("i")

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..session import conf_override
 from ..sources import load_table
 from .registry import query
 
@@ -232,9 +233,7 @@ def statestore_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("cents").alias("value_cents"),
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "4"}):
         with scratch_dir("ck_statestore_inspect_") as ck:
             run_available_now(agg, ck, "update")
             # read the checkpoint's committed keyed state AFTER the run
@@ -245,9 +244,6 @@ def statestore_inspect(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (r[0], r[1], r[2])
                 for r in state.orderBy("event_type").collect()
             ]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     return spark.createDataFrame(
         out, "event_type string, n_events long, value_cents long"
     ).orderBy("event_type")
@@ -301,17 +297,12 @@ def streaming_dedup_within_watermark(
     sdf = memory_batches_stream(
         spark, batches, src_dir.path, files_per_trigger=1
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "4"}):
         deduped = sdf.withWatermark("ts", "40 days").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
         with scratch_dir("ck_dedup_wm_") as ck:
             got = run_available_now(deduped, ck, "append")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     return (
         got.groupBy("event_type")
         .agg(F.count(F.lit(1)).cast("long").alias("n_unique"))

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..functions import text
+from ..session import conf_override
 from ..sources import load_table
 from .registry import query
 
@@ -1064,16 +1065,11 @@ def streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     sdf = memory_batches_stream(
         spark, batches, src_dir.path, files_per_trigger=1
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         with scratch_dir("ck_ph_stream_") as ck:
             got = run_available_now(
                 page_hinkley_partials(sdf, delta=PH_DELTA_C), ck, "update"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()
     return (
         got.select(
             F.col("ts_ms").alias("day_ms"),

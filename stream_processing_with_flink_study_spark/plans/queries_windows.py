@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import windows
+from ..session import conf_override
 from ..sources import load_table
 from .registry import query
 
@@ -355,11 +356,6 @@ def streaming_dynamic_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    with src_dir, conf_override(spark, {"spark.sql.shuffle.partitions": "8"}):
         with scratch_dir("ck_dynsess_") as ck:
             return run_available_now(agg, ck, "complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        src_dir.__exit__()

@@ -21,6 +21,9 @@ for scale-out behavior:
 from __future__ import annotations
 
 import os
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -55,6 +58,9 @@ def get_spark(
         # the driver's events.parquet stores ts as TIMESTAMP(NANOS) which
         # the vectorized reader rejects; read as long and convert on load
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # TIMESTAMP(MICROS, isAdjustedToUTC=false) columns read as UTC
+        # instants, not TIMESTAMP_NTZ (load_table also sets this at runtime)
+        .config("spark.sql.parquet.inferTimestampNTZEnabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -66,3 +72,32 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# every query and thread in the process shares one session
+_CONF_LOCK = threading.RLock()
+
+
+@contextmanager
+def conf_override(spark: SparkSession, conf: dict[str, str]) -> Iterator[None]:
+    """Set session conf for the body of a ``with`` block, then give each
+    key back as it was: its previous value, or unset if it had none
+    (``set(key, default)`` would leave it set for every later query).
+    One thread at a time may override; nesting on that thread is fine,
+    entry from another thread raises ``RuntimeError``."""
+    if not _CONF_LOCK.acquire(blocking=False):
+        raise RuntimeError("conf_override: another thread holds the session conf")
+    try:
+        prev = {k: spark.conf.get(k, None) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+    finally:
+        _CONF_LOCK.release()

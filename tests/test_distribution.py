@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from stream_processing_with_flink_study_spark.operators import distribution as D
+from stream_processing_with_flink_study_spark.session import conf_override
 from stream_processing_with_flink_study_spark.sources import load_table
 
 from .conftest import SF_SMALL
@@ -122,15 +123,14 @@ def test_bucketed_join_needs_no_exchange(spark, tmp_path):
     try:
         # disable broadcast so the join must prove co-partitioning (at
         # real scale neither side would broadcast anyway)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        a, b = spark.table("li_b"), spark.table("ord_b")
-        joined = a.join(b, a.l_orderkey == b.o_orderkey)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan
-        assert "SortMergeJoin" in plan
-        assert joined.count() == li.count()  # every lineitem has its order
+        with conf_override(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            a, b = spark.table("li_b"), spark.table("ord_b")
+            joined = a.join(b, a.l_orderkey == b.o_orderkey)
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert "Exchange hashpartitioning" not in plan
+            assert "SortMergeJoin" in plan
+            assert joined.count() == li.count()  # every lineitem has its order
     finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         spark.sql("DROP TABLE IF EXISTS li_b")
         spark.sql("DROP TABLE IF EXISTS ord_b")
 

@@ -10,6 +10,7 @@ import re
 import pytest
 
 from stream_processing_with_flink_study_spark import plans
+from stream_processing_with_flink_study_spark.session import conf_override
 
 from .conftest import SF_SMALL
 
@@ -67,13 +68,62 @@ def test_lookup_join_is_broadcast_not_shuffle(plan_of):
 def test_no_row_at_a_time_python(spark):
     """No query may plan BatchEvalPython (row-at-a-time Python UDF) —
     Python stages must be Arrow-vectorized (ArrowEvalPython /
-    FlatMapGroupsInPandas / MapInPandas)."""
-    offenders = []
+    FlatMapGroupsInPandas / MapInPandas).  The same pass checks that no
+    query leaves session conf behind: the session is shared, so a
+    leaked key changes the plan of every later query."""
+    offenders, conf_leaks = [], []
+    conf = dict(spark.conf.getAll)
     for name in sorted(plans.QUERIES):
         plan = fplan(plans.QUERIES[name](spark, SF_SMALL))
         if "BatchEvalPython" in plan:
             offenders.append(name)
+        after = dict(spark.conf.getAll)
+        if after != conf:
+            conf_leaks.append(name)
+            conf = after
     assert not offenders, f"row-at-a-time Python UDFs in: {offenders}"
+    assert not conf_leaks, f"session conf changed by: {conf_leaks}"
+
+
+def test_conf_override_restores_and_serializes(spark):
+    """``conf_override`` gives each key back as it found it: an unset key
+    stays unset (not pinned to its default), a set key gets its old
+    value back, also when the body raises.  Nesting on the holding
+    thread works; another thread entering meanwhile gets
+    ``RuntimeError``, and gets in once the holder is done."""
+    import threading
+    from contextlib import suppress
+
+    unset, pinned = "spark.sql.broadcastTimeout", "spark.sql.shuffle.partitions"
+    before = dict(spark.conf.getAll)
+    assert unset not in before
+
+    def other_thread_enters() -> bool:
+        entered = []
+
+        def body():
+            with suppress(RuntimeError), conf_override(spark, {pinned: "5"}):
+                entered.append(True)
+
+        t = threading.Thread(target=body)
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive()
+        return bool(entered)
+
+    with pytest.raises(ZeroDivisionError):
+        with conf_override(spark, {unset: "3600", pinned: "3"}):
+            1 / 0
+    assert dict(spark.conf.getAll) == before
+    with conf_override(spark, {unset: "3600", pinned: "3"}):
+        with conf_override(spark, {pinned: "2"}):
+            assert spark.conf.get(pinned) == "2"
+        assert spark.conf.get(pinned) == "3"
+        assert spark.conf.get(unset) == "3600"
+        assert not other_thread_enters()
+    assert dict(spark.conf.getAll) == before
+    assert other_thread_enters()
+    assert dict(spark.conf.getAll) == before
 
 
 def test_semi_join_projects_keys_only(plan_of):
@@ -262,10 +312,7 @@ def test_runtime_bloom_filter_join_pruning(spark):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k, None) for k in overrides}
-    for k, v in overrides.items():
-        spark.conf.set(k, v)
-    try:
+    with conf_override(spark, overrides):
         li = spark.read.parquet(f"{SF_SMALL}/lineitem.parquet")
         o = spark.read.parquet(f"{SF_SMALL}/orders.parquet").filter(
             "o_orderpriority = '1-URGENT'"
@@ -281,12 +328,6 @@ def test_runtime_bloom_filter_join_pruning(spark):
         assert "might_contain" in plan.lower() or "BloomFilter" in plan, plan
         # correctness unchanged by the injected filter
         assert j.first()["count"] > 0
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_coverage_index_matches_registry():

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from stream_processing_with_flink_study_spark import streaming as S
 from stream_processing_with_flink_study_spark.plans import QUERIES
+from stream_processing_with_flink_study_spark.session import conf_override
 from stream_processing_with_flink_study_spark.sources import load_table
 
 from .conftest import SF_SMALL
@@ -339,18 +340,10 @@ tws = pytest.mark.skipif(
 def rocksdb(spark):
     """transformWithStateInPandas needs the RocksDB state store; restore
     the default provider afterwards so other tests keep HDFS-backed."""
-    from stream_processing_with_flink_study_spark.streaming.process import (
-        ROCKSDB_PROVIDER,
-    )
+    from stream_processing_with_flink_study_spark.streaming.process import rocksdb_conf
 
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, ROCKSDB_PROVIDER)
-    yield
-    if old is None:
-        spark.conf.unset(key)
-    else:
-        spark.conf.set(key, old)
+    with conf_override(spark, rocksdb_conf()):
+        yield
 
 
 @tws
@@ -814,8 +807,8 @@ def test_idle_stream_side_holds_then_releases_watermark(spark, tmp_path):
     idle = mk([("b", t(0), 9.0)])  # then silence
 
     def run(policy: str, tag: str):
-        spark.conf.set("spark.sql.streaming.multipleWatermarkPolicy", policy)
-        try:
+        policy_conf = {"spark.sql.streaming.multipleWatermarkPolicy": policy}
+        with conf_override(spark, policy_conf):
             sa = S.memory_batches_stream(
                 spark, [active], str(tmp_path / f"a_{tag}")
             ).withWatermark("ts", "1 minute")
@@ -831,8 +824,6 @@ def test_idle_stream_side_holds_then_releases_watermark(spark, tmp_path):
             return S.run_available_now(
                 agg, str(tmp_path / f"ck_{tag}"), "append"
             ).toPandas()
-        finally:
-            spark.conf.unset("spark.sql.streaming.multipleWatermarkPolicy")
 
     stalled = run("min", "min")
     # min policy: watermark pinned at the idle side's (only) event minus

@@ -18,6 +18,7 @@ from stream_processing_with_flink_study_spark.plans.queries_queueing import (
     RL_MAX_REPLAY,
     RL_RATE,
 )
+from stream_processing_with_flink_study_spark.session import conf_override
 
 from .conftest import SF_MEDIUM, SF_SMALL
 
@@ -352,10 +353,7 @@ def test_aqe_skew_join_split(spark):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
     }
-    old = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with conf_override(spark, confs):
         left = spark.range(2000000).select(
             F.when(F.col("id") % 10 == 0, F.col("id") % 100)
             .otherwise(1)
@@ -373,12 +371,6 @@ def test_aqe_skew_join_split(spark):
         assert "isFinalPlan=true" in plan
         assert "skew=true" in plan, "AQE did not split the skewed partition"
         assert len(rows) == 401  # exact join+filter cardinality, pinned
-    finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_mondrian_partition_invariants(spark):
