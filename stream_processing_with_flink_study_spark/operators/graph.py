@@ -17,9 +17,15 @@ shuffle join + one aggregation; lineage is truncated per round with
 (on a real cluster with a checkpoint dir, ``checkpoint`` — same call
 shape).  Labels only ever decrease, so convergence is monotone and the
 changed-check is a cheap anti-semi probe (`limit(1).count()`).
+
+PageRank, Katz and label propagation share the same size gate: below
+it the edge list is collected once and the fixed rounds run as numpy
+scatter-adds on the driver (same outputs, no per-round Spark jobs).
 """
 
 from __future__ import annotations
+
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,7 +41,9 @@ from ..session import conf_override
 # driver union-find is O(E α(E)).  Graphs over the gate (the 100 TB
 # regime) keep the distributed loop unchanged; the gate itself is one
 # count over an already-checkpointed frame.  Same hybrid-tail pattern
-# (and a similar bound) as ``boruvka_mst``.
+# (and a similar bound) as ``boruvka_mst``.  PageRank, Katz and label
+# propagation take their driver-side kernels under the same gate, read
+# at call time (``local_threshold=None``) so tests can force it to 0.
 LOCAL_CC_SYM_LIMIT = 1_000_000
 
 # Conf for materializing a lazily chained damped iteration (pagerank,
@@ -169,6 +177,12 @@ def connected_components(
                 labels = new_labels
                 break
         labels = new_labels
+    else:
+        warnings.warn(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds; returning unconverged labels",
+            stacklevel=2,
+        )
     if vertices is not None:
         isolated = (
             vertices.select(F.col(vertex_col).cast("long").alias("id"))
@@ -191,6 +205,73 @@ BROADCAST_NODE_LIMIT = 2_000_000
 BROADCAST_EDGE_LIMIT = 4_000_000
 
 
+def _collect_under_gate(
+    frame: DataFrame, local_threshold: int | None, sym_per_row: int = 1
+):
+    """``frame`` as pandas if its ``sym_per_row`` × rows symmetric edge
+    rows fit ``local_threshold`` (None: :data:`LOCAL_CC_SYM_LIMIT`, read
+    now) and it holds no nulls, else None.  One Spark job decides and
+    collects: the ``limit(max_rows + 1)`` read is dropped above the
+    gate.  Null ids or weights go to the distributed path, whose null
+    semantics (null group keys, skipped join keys) the driver kernels
+    do not replay."""
+    gate = LOCAL_CC_SYM_LIMIT if local_threshold is None else local_threshold
+    max_rows = gate // sym_per_row
+    if max_rows <= 0:
+        return None
+    pdf = frame.limit(max_rows + 1).toPandas()
+    if len(pdf) > max_rows or pdf.isna().to_numpy().any():
+        return None
+    return pdf
+
+
+def _factorize(*cols):
+    """Shared dense codes for several id columns: (codes per column,
+    sorted ids).  Sorted, so code order is id order (LPA's smaller-label
+    tie-break), and any hashable id type works (textrank's words)."""
+    import numpy as np
+    import pandas as pd
+
+    codes, ids = pd.factorize(
+        np.concatenate([c.to_numpy() for c in cols]), sort=True
+    )
+    bounds = np.cumsum([len(c) for c in cols])[:-1]
+    return np.split(codes, bounds), ids
+
+
+def _linear_rounds(s, d, coef, x, n, iters, base, scale):
+    """``iters`` synchronous rounds of ``x[v] ← base + scale · Σ_{u→v}
+    x[u]·coef`` as bincount scatter-adds, on the rows the Spark path
+    would carry: the rounds start from the source nodes, only edges out
+    of a node that holds a value contribute (the join on ``src``), and
+    only nodes that received a message hold one afterwards (the
+    ``groupBy(dst)``).  Returns (alive mask, x)."""
+    import numpy as np
+
+    alive = np.zeros(n, dtype=bool)
+    alive[s] = True
+    for _ in range(iters):
+        m = alive[s]
+        acc = np.bincount(d[m], x[s[m]] * coef[m], minlength=n)
+        alive = np.zeros(n, dtype=bool)
+        alive[d[m]] = True
+        x = np.where(alive, base + scale * acc, 0.0)
+    return alive, x
+
+
+def _node_values(spark, ids, alive, x, id_type, col: str) -> DataFrame:
+    """(id, ``col``) rows for the alive nodes, typed like the Spark path."""
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    schema = StructType(
+        [StructField("id", id_type), StructField(col, DoubleType())]
+    )
+    return spark.createDataFrame(
+        pd.DataFrame({"id": ids[alive], col: x[alive]}), schema
+    )
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -201,6 +282,7 @@ def pagerank(
     edge_partitions: int = 8,
     broadcast_threshold: int = BROADCAST_NODE_LIMIT,
     seeds: list[int] | None = None,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Weighted PageRank over a DIRECTED edge list; returns (id, rank)
     with Σ rank = 1 after any number of iterations.
@@ -209,32 +291,38 @@ def pagerank(
     (1 − damping) is restarted uniformly over the seed set instead of
     all nodes, and the walk starts from the seeds — rank becomes
     proximity TO THE SEEDS, the recommendation/expansion primitive.
-    Same iteration, same two execution regimes; only the teleport
+    Same iteration, same three execution regimes; only the teleport
     vector changes (a tiny isin predicate, never a join).
 
     Requires every node to appear as a source (symmetrize an undirected
     graph before calling) — then every node also receives contributions
     and there is no dangling-mass correction term.
 
-    Scale shape: the outdegree-normalized edge list is persisted once,
-    HASH-PARTITIONED ON ``src`` (normalization is a window over the src
-    partitioning — one exchange, no aggregate + join-back); each round
-    joins the rank vector against that cache and runs a partial-agg'd
-    keyed sum.  Two regimes, selected by node count:
+    Scale shape: three regimes, selected by size.
 
-    * ``n_nodes <= broadcast_threshold`` — the dimension-bounded rank
-      vector is BROADCAST; the join is map-side over the edge cache.
-    * ``n_nodes > broadcast_threshold`` (billion-node graphs) — the
-      rank vector is SHUFFLE-HASH-joined: the edge cache's persisted
+    * ``|E| <= local_threshold`` (default :data:`LOCAL_CC_SYM_LIMIT`,
+      read at call time; 0 disables) — LOCAL: one job collects the edge
+      list, and the rounds run on the driver as numpy ``bincount``
+      scatter-adds (``frac = w / wout[src]``, ``acc = bincount(dst,
+      rank[src]·frac)``).  Same rows and types as the Spark path; the
+      sums differ from it only in summation order (~1e-16 relative).
+    * ``n_nodes <= broadcast_threshold`` — BROADCAST: the
+      outdegree-normalized edge list is persisted once,
+      HASH-PARTITIONED ON ``src`` (normalization is a window over the
+      src partitioning — one exchange, no aggregate + join-back); each
+      round joins the BROADCAST rank vector map-side against that cache
+      and runs a partial-agg'd keyed sum.
+    * ``n_nodes > broadcast_threshold`` (billion-node graphs) — SHUFFLE:
+      the rank vector is SHUFFLE-HASH-joined: the edge cache's persisted
       ``src`` partitioning is reused as-is, so the only per-round data
       movement is one exchange of the |V|-row rank vector plus the
       keyed-sum shuffle.  No broadcast of anything O(|V|).
 
-    Both paths share the same edge cache and aggregation expression, so
-    per-partition partial sums combine in the same order — results are
-    bit-identical (asserted in tests/test_graph.py).  The rank vector
-    is referenced exactly once per round (the join), so all rounds
-    chain into ONE lazy plan that materializes once via a final
+    The two Spark paths share the same edge cache and aggregation
+    expression, so per-partition partial sums combine in the same order
+    — results are bit-identical (asserted in tests/test_graph.py).  The
+    rank vector is referenced exactly once per round (the join), so all
+    rounds chain into ONE lazy plan that materializes once via a final
     ``localCheckpoint`` — no per-round persist+count barriers, same
     per-round shuffle/broadcast volume (round-12 rework).  AQE is
     temporarily disabled (small cached jobs; per-stage re-planning
@@ -247,6 +335,31 @@ def pagerank(
     from pyspark.sql.window import Window
 
     spark = edges.sparkSession
+    frame = edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
+    )
+    pdf = _collect_under_gate(frame, local_threshold)
+    if pdf is not None:
+        import numpy as np
+
+        (s, d), ids = _factorize(pdf["src"], pdf["dst"])
+        n = len(ids)
+        w = pdf["w"].to_numpy(dtype=np.float64)
+        frac = w / np.bincount(s, w, minlength=n)[s]
+        n_nodes = len(np.unique(s))
+        if n_nodes == 0:  # empty graph: 0 rows, seeds unused (Spark path)
+            x0, tele = np.zeros(0), 0.0
+        elif seeds is None:
+            x0 = np.full(n, 1.0 / n_nodes)
+            tele = (1.0 - damping) / n_nodes
+        else:
+            in_seeds = np.isin(ids, seeds)
+            x0 = np.where(in_seeds, 1.0 / len(seeds), 0.0)
+            tele = np.where(in_seeds, (1.0 - damping) / len(seeds), 0.0)
+        alive, x = _linear_rounds(s, d, frac, x0, n, iters, tele, damping)
+        return _node_values(
+            spark, ids, alive, x, frame.schema[1 if iters else 0].dataType, "rank"
+        )
     # repartition(edge_partitions, src), not coalesce: the shuffle-path
     # join reuses this hash partitioning every round, and 6 rounds of
     # 32-task jobs over a coalesced-partitioning-free cache measured
@@ -552,6 +665,7 @@ def label_propagation(
     rounds: int = 4,
     src: str = "src",
     dst: str = "dst",
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation over an
     undirected edge list (symmetrized internally): every node starts in
@@ -563,13 +677,47 @@ def label_propagation(
 
     Returns (id, community) for every node with at least one edge.
 
-    Scale shape: one shuffle of 2|E| label messages per round (join on
-    the neighbor's current label + a two-level count/argmax aggregate,
-    both map-side combinable); per-round frames are localCheckpointed
-    so lineage stays flat, and superseded caches are dropped eagerly.
-    The same broadcast-vs-shuffle considerations as :func:`pagerank`
-    apply; label joins here are keyed on the full node set, so the
-    shuffle form IS the default — nothing O(|V|) is ever broadcast."""
+    Scale shape: three regimes, as :func:`pagerank`.  LOCAL (2|E|
+    symmetric rows <= ``local_threshold``, default
+    :data:`LOCAL_CC_SYM_LIMIT` read at call time; 0 disables): one job
+    collects the edge list; each round is one ``np.unique`` over
+    (node, neighbour label) pairs with counts and a ``lexsort`` on
+    (node, −count, label) whose first row per node is the mode label
+    with the smaller-label tie-break — exact integer work, so the
+    labels equal the Spark path's.  Above the gate, one shuffle of
+    2|E| label messages per round (join on the neighbor's current
+    label + a two-level count/argmax aggregate, both map-side
+    combinable), rounds chained lazily over a localCheckpointed edge
+    list.  There is no separate BROADCAST regime: label joins are keyed
+    on the full node set, so the SHUFFLE form serves every size above
+    the gate — nothing O(|V|) is ever broadcast."""
+    pdf = _collect_under_gate(
+        edges.select(
+            F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
+        ),
+        local_threshold,
+        sym_per_row=2,
+    )
+    if pdf is not None:
+        import numpy as np
+        import pandas as pd
+
+        (a, b), ids = _factorize(pdf["a"], pdf["b"])
+        n = len(ids)
+        node, nbr = np.concatenate([a, b]), np.concatenate([b, a])
+        lab = np.arange(n)  # codes are sorted: code order is label order
+        for _ in range(rounds):
+            keys, cnt = np.unique(node * n + lab[nbr], return_counts=True)
+            v, lv = np.divmod(keys, n)
+            order = np.lexsort((lv, -cnt, v))
+            v, lv = v[order], lv[order]
+            first = np.diff(v, prepend=-1) != 0
+            lab = np.empty_like(lab)
+            lab[v[first]] = lv[first]
+        return edges.sparkSession.createDataFrame(
+            pd.DataFrame({"id": ids, "community": ids[lab]}),
+            "id long, community long",
+        )
     sym = edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
     ).unionByName(
@@ -869,6 +1017,7 @@ def katz_centrality(
     iters: int = 6,
     beta: float = 1.0,
     broadcast_threshold: int = BROADCAST_NODE_LIMIT,
+    local_threshold: int | None = None,
 ) -> DataFrame:
     """Katz centrality over a DIRECTED weighted edge list: ``x ←
     β·1 + α·Aᵀx`` for ``iters`` synchronous rounds from x₀ = 0 —
@@ -883,12 +1032,36 @@ def katz_centrality(
     provably converges; the bound is an exact integer aggregate,
     making α a bit-identical double in any engine.
 
-    Scale shape: identical to :func:`pagerank` — one persisted,
-    src-hash-partitioned edge cache, per-round broadcast (or
-    shuffle-hash above ``broadcast_threshold``) of the |V|-row score
-    vector, eager per-round persists with previous-round unpersist, so
-    repeated calls never accumulate cached blocks."""
+    Scale shape: the same three regimes as :func:`pagerank`.  LOCAL
+    (``|E| <= local_threshold``, default :data:`LOCAL_CC_SYM_LIMIT` read
+    at call time; 0 disables): one job collects the edge list and the
+    rounds run as driver-side ``bincount`` scatter-adds, α from the
+    same weighted in-degree maximum.  BROADCAST (``n_nodes <=
+    broadcast_threshold``) and SHUFFLE (above it): one persisted,
+    src-hash-partitioned edge cache and a per-round broadcast (or
+    shuffle-hash join) of the |V|-row score vector; the rounds chain
+    lazily and materialize once, and the edge cache is dropped before
+    returning, so repeated calls never accumulate cached blocks."""
     spark = edges.sparkSession
+    frame = edges.select(
+        F.col(src).alias("src"),
+        F.col(dst).alias("dst"),
+        F.col(weight).cast("double").alias("ew"),
+    )
+    pdf = _collect_under_gate(frame, local_threshold)
+    if pdf is not None:
+        import numpy as np
+
+        (s, d), ids = _factorize(pdf["src"], pdf["dst"])
+        n = len(ids)
+        ew = pdf["ew"].to_numpy(dtype=np.float64)
+        wdeg = np.bincount(d, ew, minlength=n)[np.unique(d)]
+        # empty edge set: 0 rows, as on the Spark path
+        alpha = 0.5 / float(wdeg.max()) if len(wdeg) else 0.0
+        alive, x = _linear_rounds(s, d, ew, np.zeros(n), n, iters, beta, alpha)
+        return _node_values(
+            spark, ids, alive, x, frame.schema[1 if iters else 0].dataType, "score"
+        )
     fedges = (
         edges.select(
             F.col(src).alias("src"),

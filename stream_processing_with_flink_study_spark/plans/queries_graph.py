@@ -19,11 +19,15 @@ order jitter (~1e-12 relative) can never flip a digit, and the top-k
 cut orders by the ROUNDED value with the node id as tiebreak so the
 cut itself is engine-stable.
 
-Bench note: a single cold run of ``pagerank_cosupplier`` pays ~7 s of
-one-time whole-stage-codegen JIT (the nested higher-order combination
-expression plus the iteration chain); the warm steady-state is ~1.8 s
-at sf0.1.  The cold cost is compile latency, not data work — it does
-not grow with scale factor.
+Bench note: below ``operators.graph.LOCAL_CC_SYM_LIMIT`` symmetric edge
+rows (sf0.1's co-supplier graph has 486,754) PageRank, Katz
+and label propagation collect the edge list in one job and iterate on
+the driver, so their wall is the edge derivation plus one collect; the
+per-round Spark loops run only above the gate.  Measured on a 4-vCPU
+VM (perfbench ``graph_iter``, seed 1, sf0.01-shaped lineitem, warm
+passes): ``pagerank_cosupplier`` 0.31-0.41 s and ``lpa_communities``
+0.15-0.20 s, against 1.61-1.62 s and 1.05-1.09 s for the per-round
+loops.
 """
 
 from __future__ import annotations
@@ -227,8 +231,9 @@ def pagerank_cosupplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the orders table is touched ONCE (edge derivation);
     the iteration itself is :func:`..operators.graph.pagerank`
-    (broadcast-iterate over a persisted outdegree-normalized edge
-    cache — see its docstring for the full cost model).  Symmetric
+    (driver-side scatter-adds under the local edge gate, broadcast or
+    shuffle-hash rounds above it — see its docstring for the full cost
+    model), which reads the symmetric union once.  Symmetric
     edges → every node has in- and out-degree ≥ 1, so there is no
     dangling-mass term.  Ranks are reported relative to uniform
     (``rank · N``) and Σ rank = 1 is unit-tested on hand graphs in
@@ -236,8 +241,6 @@ def pagerank_cosupplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank
 
     edges = _cosupplier_edges(spark, sf_dir)
-    # both union branches read the same subtree → materialize it once
-    edges = edges.persist()
     sym = edges.union(
         edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
@@ -925,17 +928,16 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind 'suppliers like these' recommendations and taint
     propagation from a watchlist.
 
-    Scale shape: identical to ``pagerank_cosupplier`` (same persisted
-    src-partitioned edge cache, same broadcast/shuffle regimes) — the
-    ONLY change is the teleport vector, an ``isin`` predicate over the
-    tiny seed list (never a join).  Seeds collapse most rank mass near
-    the seed neighborhood; far nodes report 0 — the oracle replays the
-    same 6 unrolled rounds, so both engines agree on every digit of
-    the rounded relative ranks."""
+    Scale shape: identical to ``pagerank_cosupplier`` (same
+    local/broadcast/shuffle regimes) — the ONLY change is the teleport
+    vector, an ``isin`` predicate over the tiny seed list (never a
+    join).  Seeds collapse most rank mass near the seed neighborhood;
+    far nodes report 0 — the oracle replays the same 6 unrolled rounds,
+    so both engines agree on every digit of the rounded relative
+    ranks."""
     from ..operators.graph import pagerank
 
     edges = _cosupplier_edges(spark, sf_dir)
-    edges = edges.persist()
     sym = edges.union(
         edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
@@ -957,7 +959,6 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("s_suppkey"),
         F.round(F.col("rank") * n_nodes, 5).alias("rank_rel"),
     )
-    edges.unpersist()
     return out.orderBy(F.desc("rank_rel"), F.asc("s_suppkey")).limit(20)
 
 
@@ -1504,14 +1505,13 @@ def katz_centrality_cosupplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: edge derivation touches lineitem once (packed-int64
     2-combination explode, same as ``pagerank_cosupplier``); the
     iteration is :func:`..operators.graph.katz_centrality` — the same
-    persisted edge cache + broadcast-or-shuffle-hash per-round regime
-    as PageRank, so the billion-node path is already wired.  α is an
-    exact-integer-derived double, every round applies identical IEEE
-    ops, and the final 5-decimal rounding sits far above the keyed-sum
-    jitter."""
+    local/broadcast/shuffle regimes as PageRank, so the billion-node
+    path is already wired.  α is an exact-integer-derived double, every
+    round applies identical IEEE ops, and the final 5-decimal rounding
+    sits far above the keyed-sum jitter."""
     from ..operators.graph import katz_centrality
 
-    edges = _cosupplier_edges(spark, sf_dir).persist()
+    edges = _cosupplier_edges(spark, sf_dir)
     sym = edges.union(
         edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
@@ -1527,7 +1527,6 @@ def katz_centrality_cosupplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
     )
     rows = out.collect()
-    edges.unpersist()
     scores.unpersist()
     return spark.createDataFrame(rows, out.schema)
 

@@ -211,7 +211,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus is touched once (the same 3-offset zip
     explode as ``skipgram_pmi_pairs``); the graph itself is
     VOCABULARY-bounded, so the PageRank iteration — whichever of the
-    operator's two regimes the node count selects — runs on a
+    operator's three regimes the graph size selects — runs on a
     dimension-sized frame.  Rank is reported relative to uniform
     (rank · N), matching ``pagerank_cosupplier``."""
     from ..operators.graph import pagerank

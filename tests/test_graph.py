@@ -3,6 +3,9 @@ isolated vertices, convergence on chains longer than one round."""
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from stream_processing_with_flink_study_spark.operators.graph import (
@@ -45,9 +48,10 @@ def test_max_iter_caps_rounds(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long"
     )
-    out = _comps(
-        connected_components(edges, max_iter=1, local_threshold=0)
-    )
+    with pytest.warns(UserWarning, match="unconverged"):
+        out = _comps(
+            connected_components(edges, max_iter=1, local_threshold=0)
+        )
     assert out[1] == 1 and out[2] == 1 and out[3] == 1
     assert out[5] == 3  # two hops reached 3's initial label, not 1
 
@@ -176,16 +180,22 @@ def test_kcore_peeling(spark):
 def test_pagerank_shuffle_path_bit_identical(spark):
     """broadcast_threshold=0 forces the large-graph shuffle-hash path;
     ranks must be BIT-identical to the broadcast path (same edge cache
-    partitioning -> same partial-sum combine order)."""
+    partitioning -> same partial-sum combine order).  local_threshold=0
+    keeps both calls off the driver-side kernel."""
     from stream_processing_with_flink_study_spark.operators.graph import pagerank
 
     edges = _sym(
         spark, [(1, 2, 10), (2, 3, 1), (1, 3, 1), (3, 4, 2), (4, 1, 5)]
     )
-    bc = {r["id"]: r["rank"] for r in pagerank(edges, iters=6).collect()}
+    bc = {
+        r["id"]: r["rank"]
+        for r in pagerank(edges, iters=6, local_threshold=0).collect()
+    }
     sh = {
         r["id"]: r["rank"]
-        for r in pagerank(edges, iters=6, broadcast_threshold=0).collect()
+        for r in pagerank(
+            edges, iters=6, broadcast_threshold=0, local_threshold=0
+        ).collect()
     }
     assert bc == sh  # exact float equality, not approx
     assert abs(sum(sh.values()) - 1.0) < 1e-9
@@ -330,3 +340,168 @@ def test_edge_snapshot_fingerprint_invalidation(tmp_path):
     st = os.stat(victim)
     os.utime(victim, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
     assert _dataset_fingerprint(str(d)) != f1
+
+
+# ---------------------------------------------------------------------------
+# Driver-side kernels under the local edge gate (pagerank, katz, LPA):
+# local_threshold=0 forces the Spark loops, so every test below runs
+# both sides of the gate on the same hand graph.
+# ---------------------------------------------------------------------------
+
+
+def _random_sym(spark, seed=7, n=40, m=90):
+    rng = random.Random(seed)
+    und = sorted(
+        {
+            (min(a, b), max(a, b))
+            for a, b in (
+                (rng.randrange(n), rng.randrange(n)) for _ in range(m)
+            )
+            if a != b
+        }
+    )
+    return _sym(spark, [(a, b, rng.randint(1, 5)) for a, b in und])
+
+
+def _by_id(df) -> dict:
+    return {r[0]: r[1] for r in df.collect()}
+
+
+def _assert_close(local, dist):
+    assert local.keys() == dist.keys()
+    for k, v in dist.items():
+        assert local[k] == pytest.approx(v, rel=1e-12), k
+
+
+@pytest.mark.parametrize("seeds", [None, [1, 5, 7]])
+def test_pagerank_local_matches_distributed(spark, seeds):
+    from stream_processing_with_flink_study_spark.operators.graph import pagerank
+
+    edges = _random_sym(spark)
+    local = pagerank(edges, iters=6, seeds=seeds)
+    dist = pagerank(edges, iters=6, seeds=seeds, local_threshold=0)
+    assert local.schema == dist.schema
+    _assert_close(_by_id(local), _by_id(dist))
+
+
+def test_katz_local_matches_distributed(spark):
+    from stream_processing_with_flink_study_spark.operators.graph import (
+        katz_centrality,
+    )
+
+    edges = _random_sym(spark)
+    local = katz_centrality(edges, iters=6)
+    dist = katz_centrality(edges, iters=6, local_threshold=0)
+    assert local.schema == dist.schema
+    _assert_close(_by_id(local), _by_id(dist))
+
+
+def test_lpa_local_matches_distributed(spark):
+    from stream_processing_with_flink_study_spark.operators.graph import (
+        label_propagation,
+    )
+
+    edges = _random_sym(spark, seed=11).select("src", "dst")
+    for rounds in (1, 4):
+        local = label_propagation(edges, rounds=rounds)
+        dist = label_propagation(edges, rounds=rounds, local_threshold=0)
+        assert local.schema == dist.schema
+        assert _by_id(local) == _by_id(dist), rounds
+
+
+def test_lpa_two_triangles_and_tie_break(spark):
+    """Triangles 1-2-3 and 4-5-6 joined by the bridge 3-4, plus node 7
+    adjacent to both bridge ends.  After 4 rounds each triangle is one
+    community, and 7 sees labels 1 and 3 once each: the tie goes to the
+    smaller label.  After 1 round every node's neighbour labels tie
+    (node 1 sees 2 and 3 -> 2), so round one pins the rule on its own."""
+    from stream_processing_with_flink_study_spark.operators.graph import (
+        label_propagation,
+    )
+
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 3), (2, 3), (4, 5), (4, 6), (5, 6), (3, 4), (7, 3), (7, 4)],
+        "src long, dst long",
+    )
+    for threshold in (None, 0):
+        one = _by_id(label_propagation(edges, rounds=1, local_threshold=threshold))
+        assert one == {1: 2, 2: 1, 3: 1, 4: 3, 5: 4, 6: 4, 7: 3}
+        four = _by_id(label_propagation(edges, rounds=4, local_threshold=threshold))
+        assert four == {1: 1, 2: 1, 3: 1, 4: 3, 5: 3, 6: 3, 7: 1}
+
+
+def test_pagerank_string_ids_local_matches_distributed(spark):
+    """Word ids (the textrank shape) ride the same kernel."""
+    from stream_processing_with_flink_study_spark.operators.graph import pagerank
+
+    und = [("graph", "rank", 3), ("rank", "word", 1), ("graph", "word", 2),
+           ("word", "text", 4)]
+    rows = und + [(b, a, w) for a, b, w in und]
+    edges = spark.createDataFrame(rows, "src string, dst string, w long")
+    local = pagerank(edges, iters=6)
+    dist = pagerank(edges, iters=6, local_threshold=0)
+    assert local.schema == dist.schema
+    assert set(_by_id(local)) == {"graph", "rank", "word", "text"}
+    _assert_close(_by_id(local), _by_id(dist))
+
+
+def test_iterative_operators_empty_edge_list(spark):
+    from stream_processing_with_flink_study_spark.operators.graph import (
+        katz_centrality,
+        label_propagation,
+        pagerank,
+    )
+
+    empty = spark.createDataFrame([], "src long, dst long, w long")
+    for op in (pagerank, katz_centrality, label_propagation):
+        local = op(empty)
+        dist = op(empty, local_threshold=0)
+        assert local.count() == 0 and dist.count() == 0, op.__name__
+        # same names and types (the Spark path's literal rank/score
+        # column is non-nullable; nullability is not compared)
+        assert [(f.name, f.dataType) for f in local.schema] == [
+            (f.name, f.dataType) for f in dist.schema
+        ], op.__name__
+    # seeded PageRank returns before building its (here empty) teleport
+    assert pagerank(empty, seeds=[]).count() == 0
+    assert pagerank(empty, seeds=[], local_threshold=0).count() == 0
+
+
+def test_cc_warns_when_max_iter_stops_unconverged(spark):
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long"
+    )
+    with pytest.warns(UserWarning, match="max_iter=1"):
+        connected_components(edges, max_iter=1, local_threshold=0)
+
+
+LOCAL_GATE_QUERIES = [
+    "pagerank_cosupplier",
+    "personalized_pagerank",
+    "katz_centrality_cosupplier",
+    "lpa_communities",
+    "textrank_keywords",
+]
+
+
+@pytest.mark.parametrize("gate", ["default", "forced_distributed"])
+@pytest.mark.parametrize("name", LOCAL_GATE_QUERIES)
+def test_graph_queries_match_oracle_both_sides_of_gate(
+    spark, duck_medium, monkeypatch, name, gate
+):
+    from stream_processing_with_flink_study_spark import plans
+    from stream_processing_with_flink_study_spark.operators import graph
+
+    from .conftest import SF_MEDIUM
+    from .util import assert_matches_oracle
+
+    if gate == "forced_distributed":
+        monkeypatch.setattr(graph, "LOCAL_CC_SYM_LIMIT", 0)
+    try:
+        assert_matches_oracle(
+            plans.QUERIES[name](spark, SF_MEDIUM),
+            duck_medium,
+            plans.ORACLES[name],
+        )
+    finally:
+        spark.catalog.clearCache()
