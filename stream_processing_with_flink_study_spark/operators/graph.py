@@ -43,7 +43,7 @@ from ..session import conf_override
 # count over an already-checkpointed frame.  Same hybrid-tail pattern
 # (and a similar bound) as ``boruvka_mst``.  PageRank, Katz and label
 # propagation take their driver-side kernels under the same gate, read
-# at call time (``local_threshold=None``) so tests can force it to 0.
+# at call time so tests can set it to 0 to force their Spark loops.
 LOCAL_CC_SYM_LIMIT = 1_000_000
 
 # Conf for materializing a lazily chained damped iteration (pagerank,
@@ -161,28 +161,33 @@ def connected_components(
             .agg(F.min("comp").alias("comp"))
         )
 
+    def lowered(new: DataFrame, old: DataFrame) -> bool:
+        return (
+            new.alias("n")
+            .join(old.alias("o"), "id")
+            .filter(F.col("n.comp") < F.col("o.comp"))
+            .limit(1)
+            .count()
+            > 0
+        )
+
     for rnd in range(max_iter):
         new_labels = step(step(labels)).localCheckpoint()
         # round 0 always changes labels on any non-empty edge list, so
         # the convergence probe (an extra job) starts at round 1
-        if rnd > 0:
-            changed = (
-                new_labels.alias("n")
-                .join(labels.alias("o"), "id")
-                .filter(F.col("n.comp") < F.col("o.comp"))
-                .limit(1)
-                .count()
-            )
-            if changed == 0:
-                labels = new_labels
-                break
+        if rnd > 0 and not lowered(new_labels, labels):
+            labels = new_labels
+            break
         labels = new_labels
     else:
-        warnings.warn(
-            f"connected_components: labels still changing after "
-            f"max_iter={max_iter} rounds; returning unconverged labels",
-            stacklevel=2,
-        )
+        # out of rounds: warn only if one more hop would still lower a
+        # label (a round that changed labels may have been the last one)
+        if lowered(step(labels), labels):
+            warnings.warn(
+                f"connected_components: labels still changing after "
+                f"max_iter={max_iter} rounds; returning unconverged labels",
+                stacklevel=2,
+            )
     if vertices is not None:
         isolated = (
             vertices.select(F.col(vertex_col).cast("long").alias("id"))
@@ -205,24 +210,18 @@ BROADCAST_NODE_LIMIT = 2_000_000
 BROADCAST_EDGE_LIMIT = 4_000_000
 
 
-def _collect_under_gate(
-    frame: DataFrame, local_threshold: int | None, sym_per_row: int = 1
-):
+def _collect_under_gate(frame: DataFrame, sym_per_row: int = 1):
     """``frame`` as pandas if its ``sym_per_row`` × rows symmetric edge
-    rows fit ``local_threshold`` (None: :data:`LOCAL_CC_SYM_LIMIT`, read
-    now) and it holds no nulls, else None.  One Spark job decides and
-    collects: the ``limit(max_rows + 1)`` read is dropped above the
-    gate.  Null ids or weights go to the distributed path, whose null
-    semantics (null group keys, skipped join keys) the driver kernels
-    do not replay."""
-    gate = LOCAL_CC_SYM_LIMIT if local_threshold is None else local_threshold
-    max_rows = gate // sym_per_row
-    if max_rows <= 0:
+    rows fit :data:`LOCAL_CC_SYM_LIMIT` (read now; 0 forces the Spark
+    loops) and it holds no nulls, else None.  A count decides first, so
+    a graph above the gate is never pulled to the driver.  Null ids or
+    weights go to the distributed path, whose null semantics (null group
+    keys, skipped join keys) the driver kernels do not replay."""
+    max_rows = LOCAL_CC_SYM_LIMIT // sym_per_row
+    if max_rows <= 0 or frame.count() > max_rows:
         return None
-    pdf = frame.limit(max_rows + 1).toPandas()
-    if len(pdf) > max_rows or pdf.isna().to_numpy().any():
-        return None
-    return pdf
+    pdf = frame.toPandas()
+    return None if pdf.isna().to_numpy().any() else pdf
 
 
 def _factorize(*cols):
@@ -282,7 +281,6 @@ def pagerank(
     edge_partitions: int = 8,
     broadcast_threshold: int = BROADCAST_NODE_LIMIT,
     seeds: list[int] | None = None,
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """Weighted PageRank over a DIRECTED edge list; returns (id, rank)
     with Σ rank = 1 after any number of iterations.
@@ -300,11 +298,10 @@ def pagerank(
 
     Scale shape: three regimes, selected by size.
 
-    * ``|E| <= local_threshold`` (default :data:`LOCAL_CC_SYM_LIMIT`,
-      read at call time; 0 disables) — LOCAL: one job collects the edge
-      list, and the rounds run on the driver as numpy ``bincount``
-      scatter-adds (``frac = w / wout[src]``, ``acc = bincount(dst,
-      rank[src]·frac)``).  Same rows and types as the Spark path; the
+    * ``|E| <= LOCAL_CC_SYM_LIMIT`` (read at call time) — LOCAL: one
+      count decides, one job collects the edge list, and the rounds run
+      on the driver as numpy ``bincount`` scatter-adds (``frac = w /
+      wout[src]``, ``acc = bincount(dst, rank[src]·frac)``).  Same rows and types as the Spark path; the
       sums differ from it only in summation order (~1e-16 relative).
     * ``n_nodes <= broadcast_threshold`` — BROADCAST: the
       outdegree-normalized edge list is persisted once,
@@ -338,7 +335,7 @@ def pagerank(
     frame = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
     )
-    pdf = _collect_under_gate(frame, local_threshold)
+    pdf = _collect_under_gate(frame)
     if pdf is not None:
         import numpy as np
 
@@ -665,7 +662,6 @@ def label_propagation(
     rounds: int = 4,
     src: str = "src",
     dst: str = "dst",
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """Community detection by synchronous label propagation over an
     undirected edge list (symmetrized internally): every node starts in
@@ -678,15 +674,14 @@ def label_propagation(
     Returns (id, community) for every node with at least one edge.
 
     Scale shape: three regimes, as :func:`pagerank`.  LOCAL (2|E|
-    symmetric rows <= ``local_threshold``, default
-    :data:`LOCAL_CC_SYM_LIMIT` read at call time; 0 disables): one job
-    collects the edge list; each round is one ``np.unique`` over
-    (node, neighbour label) pairs with counts and a ``lexsort`` on
-    (node, −count, label) whose first row per node is the mode label
-    with the smaller-label tie-break — exact integer work, so the
-    labels equal the Spark path's.  Above the gate, one shuffle of
-    2|E| label messages per round (join on the neighbor's current
-    label + a two-level count/argmax aggregate, both map-side
+    symmetric rows <= :data:`LOCAL_CC_SYM_LIMIT`, read at call time):
+    one count decides and one job collects the edge list; each round is
+    one ``np.unique`` over (node, neighbour label) pairs with counts and
+    a ``lexsort`` on (node, −count, label) whose first row per node is
+    the mode label with the smaller-label tie-break — exact integer
+    work, so the labels equal the Spark path's.  Above the gate, one
+    shuffle of 2|E| label messages per round (join on the neighbor's
+    current label + a two-level count/argmax aggregate, both map-side
     combinable), rounds chained lazily over a localCheckpointed edge
     list.  There is no separate BROADCAST regime: label joins are keyed
     on the full node set, so the SHUFFLE form serves every size above
@@ -695,7 +690,6 @@ def label_propagation(
         edges.select(
             F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
         ),
-        local_threshold,
         sym_per_row=2,
     )
     if pdf is not None:
@@ -1017,7 +1011,6 @@ def katz_centrality(
     iters: int = 6,
     beta: float = 1.0,
     broadcast_threshold: int = BROADCAST_NODE_LIMIT,
-    local_threshold: int | None = None,
 ) -> DataFrame:
     """Katz centrality over a DIRECTED weighted edge list: ``x ←
     β·1 + α·Aᵀx`` for ``iters`` synchronous rounds from x₀ = 0 —
@@ -1033,9 +1026,8 @@ def katz_centrality(
     making α a bit-identical double in any engine.
 
     Scale shape: the same three regimes as :func:`pagerank`.  LOCAL
-    (``|E| <= local_threshold``, default :data:`LOCAL_CC_SYM_LIMIT` read
-    at call time; 0 disables): one job collects the edge list and the
-    rounds run as driver-side ``bincount`` scatter-adds, α from the
+    (``|E| <= LOCAL_CC_SYM_LIMIT``, read at call time): one count
+    decides, one job collects the edge list and the rounds run as driver-side ``bincount`` scatter-adds, α from the
     same weighted in-degree maximum.  BROADCAST (``n_nodes <=
     broadcast_threshold``) and SHUFFLE (above it): one persisted,
     src-hash-partitioned edge cache and a per-round broadcast (or
@@ -1048,7 +1040,7 @@ def katz_centrality(
         F.col(dst).alias("dst"),
         F.col(weight).cast("double").alias("ew"),
     )
-    pdf = _collect_under_gate(frame, local_threshold)
+    pdf = _collect_under_gate(frame)
     if pdf is not None:
         import numpy as np
 

@@ -21,13 +21,13 @@ cut itself is engine-stable.
 
 Bench note: below ``operators.graph.LOCAL_CC_SYM_LIMIT`` symmetric edge
 rows (sf0.1's co-supplier graph has 486,754) PageRank, Katz
-and label propagation collect the edge list in one job and iterate on
-the driver, so their wall is the edge derivation plus one collect; the
-per-round Spark loops run only above the gate.  Measured on a 4-vCPU
-VM (perfbench ``graph_iter``, seed 1, sf0.01-shaped lineitem, warm
-passes): ``pagerank_cosupplier`` 0.31-0.41 s and ``lpa_communities``
-0.15-0.20 s, against 1.61-1.62 s and 1.05-1.09 s for the per-round
-loops.
+and label propagation count the edge list, collect it, and iterate on
+the driver, so their wall is the edge derivation plus a count and a
+collect; the per-round Spark loops run only above the gate.  Measured
+on a 4-vCPU VM (perfbench ``graph_iter``, seed 1, sf0.01-shaped
+lineitem, traced warm passes): ``pagerank_cosupplier`` 0.37-0.52 s and
+``lpa_communities`` 0.21-0.27 s, against 2.20-2.38 s and 1.31-1.77 s
+for the per-round loops in a run just before.
 """
 
 from __future__ import annotations
@@ -938,6 +938,7 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.graph import pagerank
 
     edges = _cosupplier_edges(spark, sf_dir)
+    edges = edges.persist()
     sym = edges.union(
         edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
@@ -959,6 +960,7 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("s_suppkey"),
         F.round(F.col("rank") * n_nodes, 5).alias("rank_rel"),
     )
+    edges.unpersist()
     return out.orderBy(F.desc("rank_rel"), F.asc("s_suppkey")).limit(20)
 
 
@@ -1511,7 +1513,7 @@ def katz_centrality_cosupplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     sits far above the keyed-sum jitter."""
     from ..operators.graph import katz_centrality
 
-    edges = _cosupplier_edges(spark, sf_dir)
+    edges = _cosupplier_edges(spark, sf_dir).persist()
     sym = edges.union(
         edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
@@ -1527,6 +1529,7 @@ def katz_centrality_cosupplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
     )
     rows = out.collect()
+    edges.unpersist()
     scores.unpersist()
     return spark.createDataFrame(rows, out.schema)
 

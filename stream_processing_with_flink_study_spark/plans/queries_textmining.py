@@ -249,7 +249,10 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     ranks = pagerank(edges, iters=PR_ITERS, damping=PR_DAMPING)
-    n_nodes = edges.select("src").distinct().count()
+    # the edge list is symmetric, so every word sends and receives and
+    # ranks holds one row per word: counting it does not re-derive the
+    # graph from the corpus
+    n_nodes = ranks.count()
     return (
         ranks.select(
             F.col("id").alias("word"),

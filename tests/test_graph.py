@@ -4,10 +4,12 @@ isolated vertices, convergence on chains longer than one round."""
 from __future__ import annotations
 
 import random
+import warnings
 
 import pytest
 from pyspark.sql import functions as F
 
+from stream_processing_with_flink_study_spark.operators import graph
 from stream_processing_with_flink_study_spark.operators.graph import (
     connected_components,
 )
@@ -48,12 +50,27 @@ def test_max_iter_caps_rounds(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long"
     )
-    with pytest.warns(UserWarning, match="unconverged"):
+    with pytest.warns(UserWarning, match="max_iter=1"):
         out = _comps(
             connected_components(edges, max_iter=1, local_threshold=0)
         )
     assert out[1] == 1 and out[2] == 1 and out[3] == 1
     assert out[5] == 3  # two hops reached 3's initial label, not 1
+
+
+def test_max_iter_converged_star_does_not_warn(spark):
+    # a star converges within its one round: the loop runs out of
+    # rounds, but no further hop lowers a label, so nothing is reported
+    edges = spark.createDataFrame(
+        [(1, 2), (1, 3), (1, 4), (1, 5)], "id_a long, id_b long"
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = _comps(
+            connected_components(edges, max_iter=1, local_threshold=0)
+        )
+    assert set(out.values()) == {1}
+    assert not [w for w in caught if "connected_components" in str(w.message)]
 
 
 def test_local_tail_matches_distributed(spark):
@@ -177,25 +194,21 @@ def test_kcore_peeling(spark):
     assert kcore(edges, k=4).count() == 0
 
 
-def test_pagerank_shuffle_path_bit_identical(spark):
+def test_pagerank_shuffle_path_bit_identical(spark, monkeypatch):
     """broadcast_threshold=0 forces the large-graph shuffle-hash path;
     ranks must be BIT-identical to the broadcast path (same edge cache
-    partitioning -> same partial-sum combine order).  local_threshold=0
-    keeps both calls off the driver-side kernel."""
+    partitioning -> same partial-sum combine order).  A local edge gate
+    of 0 keeps both calls off the driver-side kernel."""
     from stream_processing_with_flink_study_spark.operators.graph import pagerank
 
+    monkeypatch.setattr(graph, "LOCAL_CC_SYM_LIMIT", 0)
     edges = _sym(
         spark, [(1, 2, 10), (2, 3, 1), (1, 3, 1), (3, 4, 2), (4, 1, 5)]
     )
-    bc = {
-        r["id"]: r["rank"]
-        for r in pagerank(edges, iters=6, local_threshold=0).collect()
-    }
+    bc = {r["id"]: r["rank"] for r in pagerank(edges, iters=6).collect()}
     sh = {
         r["id"]: r["rank"]
-        for r in pagerank(
-            edges, iters=6, broadcast_threshold=0, local_threshold=0
-        ).collect()
+        for r in pagerank(edges, iters=6, broadcast_threshold=0).collect()
     }
     assert bc == sh  # exact float equality, not approx
     assert abs(sum(sh.values()) - 1.0) < 1e-9
@@ -344,9 +357,16 @@ def test_edge_snapshot_fingerprint_invalidation(tmp_path):
 
 # ---------------------------------------------------------------------------
 # Driver-side kernels under the local edge gate (pagerank, katz, LPA):
-# local_threshold=0 forces the Spark loops, so every test below runs
-# both sides of the gate on the same hand graph.
+# a gate of 0 forces the Spark loops, so every test below runs both
+# sides of the gate on the same hand graph.
 # ---------------------------------------------------------------------------
+
+
+def _spark_loop(monkeypatch, op, *args, **kwargs):
+    """``op`` called with the local edge gate at 0 (its Spark loop)."""
+    with monkeypatch.context() as m:
+        m.setattr(graph, "LOCAL_CC_SYM_LIMIT", 0)
+        return op(*args, **kwargs)
 
 
 def _random_sym(spark, seed=7, n=40, m=90):
@@ -374,29 +394,29 @@ def _assert_close(local, dist):
 
 
 @pytest.mark.parametrize("seeds", [None, [1, 5, 7]])
-def test_pagerank_local_matches_distributed(spark, seeds):
+def test_pagerank_local_matches_distributed(spark, monkeypatch, seeds):
     from stream_processing_with_flink_study_spark.operators.graph import pagerank
 
     edges = _random_sym(spark)
     local = pagerank(edges, iters=6, seeds=seeds)
-    dist = pagerank(edges, iters=6, seeds=seeds, local_threshold=0)
+    dist = _spark_loop(monkeypatch, pagerank, edges, iters=6, seeds=seeds)
     assert local.schema == dist.schema
     _assert_close(_by_id(local), _by_id(dist))
 
 
-def test_katz_local_matches_distributed(spark):
+def test_katz_local_matches_distributed(spark, monkeypatch):
     from stream_processing_with_flink_study_spark.operators.graph import (
         katz_centrality,
     )
 
     edges = _random_sym(spark)
     local = katz_centrality(edges, iters=6)
-    dist = katz_centrality(edges, iters=6, local_threshold=0)
+    dist = _spark_loop(monkeypatch, katz_centrality, edges, iters=6)
     assert local.schema == dist.schema
     _assert_close(_by_id(local), _by_id(dist))
 
 
-def test_lpa_local_matches_distributed(spark):
+def test_lpa_local_matches_distributed(spark, monkeypatch):
     from stream_processing_with_flink_study_spark.operators.graph import (
         label_propagation,
     )
@@ -404,12 +424,12 @@ def test_lpa_local_matches_distributed(spark):
     edges = _random_sym(spark, seed=11).select("src", "dst")
     for rounds in (1, 4):
         local = label_propagation(edges, rounds=rounds)
-        dist = label_propagation(edges, rounds=rounds, local_threshold=0)
+        dist = _spark_loop(monkeypatch, label_propagation, edges, rounds=rounds)
         assert local.schema == dist.schema
         assert _by_id(local) == _by_id(dist), rounds
 
 
-def test_lpa_two_triangles_and_tie_break(spark):
+def test_lpa_two_triangles_and_tie_break(spark, monkeypatch):
     """Triangles 1-2-3 and 4-5-6 joined by the bridge 3-4, plus node 7
     adjacent to both bridge ends.  After 4 rounds each triangle is one
     community, and 7 sees labels 1 and 3 once each: the tie goes to the
@@ -423,14 +443,15 @@ def test_lpa_two_triangles_and_tie_break(spark):
         [(1, 2), (1, 3), (2, 3), (4, 5), (4, 6), (5, 6), (3, 4), (7, 3), (7, 4)],
         "src long, dst long",
     )
-    for threshold in (None, 0):
-        one = _by_id(label_propagation(edges, rounds=1, local_threshold=threshold))
+    for gate in (graph.LOCAL_CC_SYM_LIMIT, 0):
+        monkeypatch.setattr(graph, "LOCAL_CC_SYM_LIMIT", gate)
+        one = _by_id(label_propagation(edges, rounds=1))
         assert one == {1: 2, 2: 1, 3: 1, 4: 3, 5: 4, 6: 4, 7: 3}
-        four = _by_id(label_propagation(edges, rounds=4, local_threshold=threshold))
+        four = _by_id(label_propagation(edges, rounds=4))
         assert four == {1: 1, 2: 1, 3: 1, 4: 3, 5: 3, 6: 3, 7: 1}
 
 
-def test_pagerank_string_ids_local_matches_distributed(spark):
+def test_pagerank_string_ids_local_matches_distributed(spark, monkeypatch):
     """Word ids (the textrank shape) ride the same kernel."""
     from stream_processing_with_flink_study_spark.operators.graph import pagerank
 
@@ -439,13 +460,13 @@ def test_pagerank_string_ids_local_matches_distributed(spark):
     rows = und + [(b, a, w) for a, b, w in und]
     edges = spark.createDataFrame(rows, "src string, dst string, w long")
     local = pagerank(edges, iters=6)
-    dist = pagerank(edges, iters=6, local_threshold=0)
+    dist = _spark_loop(monkeypatch, pagerank, edges, iters=6)
     assert local.schema == dist.schema
     assert set(_by_id(local)) == {"graph", "rank", "word", "text"}
     _assert_close(_by_id(local), _by_id(dist))
 
 
-def test_iterative_operators_empty_edge_list(spark):
+def test_iterative_operators_empty_edge_list(spark, monkeypatch):
     from stream_processing_with_flink_study_spark.operators.graph import (
         katz_centrality,
         label_propagation,
@@ -455,7 +476,7 @@ def test_iterative_operators_empty_edge_list(spark):
     empty = spark.createDataFrame([], "src long, dst long, w long")
     for op in (pagerank, katz_centrality, label_propagation):
         local = op(empty)
-        dist = op(empty, local_threshold=0)
+        dist = _spark_loop(monkeypatch, op, empty)
         assert local.count() == 0 and dist.count() == 0, op.__name__
         # same names and types (the Spark path's literal rank/score
         # column is non-nullable; nullability is not compared)
@@ -464,15 +485,7 @@ def test_iterative_operators_empty_edge_list(spark):
         ], op.__name__
     # seeded PageRank returns before building its (here empty) teleport
     assert pagerank(empty, seeds=[]).count() == 0
-    assert pagerank(empty, seeds=[], local_threshold=0).count() == 0
-
-
-def test_cc_warns_when_max_iter_stops_unconverged(spark):
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (4, 5)], "id_a long, id_b long"
-    )
-    with pytest.warns(UserWarning, match="max_iter=1"):
-        connected_components(edges, max_iter=1, local_threshold=0)
+    assert _spark_loop(monkeypatch, pagerank, empty, seeds=[]).count() == 0
 
 
 LOCAL_GATE_QUERIES = [
@@ -490,7 +503,6 @@ def test_graph_queries_match_oracle_both_sides_of_gate(
     spark, duck_medium, monkeypatch, name, gate
 ):
     from stream_processing_with_flink_study_spark import plans
-    from stream_processing_with_flink_study_spark.operators import graph
 
     from .conftest import SF_MEDIUM
     from .util import assert_matches_oracle
