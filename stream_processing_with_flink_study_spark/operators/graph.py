@@ -18,9 +18,12 @@ shuffle join + one aggregation; lineage is truncated per round with
 shape).  Labels only ever decrease, so convergence is monotone and the
 changed-check is a cheap anti-semi probe (`limit(1).count()`).
 
-PageRank, Katz and label propagation share the same size gate: below
-it the edge list is collected once and the fixed rounds run as numpy
-scatter-adds on the driver (same outputs, no per-round Spark jobs).
+Connected components, PageRank, Katz and label propagation share one
+local size gate: below it the edge list is collected once and solved
+on the driver (union-find, or the fixed rounds as numpy scatter-adds —
+same outputs, no per-round Spark jobs).  Every gate is a module
+constant read at call time, and every collect-to-driver decision goes
+through :func:`_collect_under_gate` (count first, then collect).
 """
 
 from __future__ import annotations
@@ -33,18 +36,33 @@ from pyspark.sql import functions as F
 from ..session import conf_override
 
 
-# Size gate for the sequential union-find tail: symmetrized edge lists
-# at or under this row count (≈500k undirected edges, ~16 MB as two
-# int64 pandas columns) are collected and solved on the driver —
-# min-label propagation needs diameter/2 rounds of ~8 scheduled jobs
-# each, which at small-graph sizes is pure scheduling wall, while a
-# driver union-find is O(E α(E)).  Graphs over the gate (the 100 TB
-# regime) keep the distributed loop unchanged; the gate itself is one
-# count over an already-checkpointed frame.  Same hybrid-tail pattern
-# (and a similar bound) as ``boruvka_mst``.  PageRank, Katz and label
-# propagation take their driver-side kernels under the same gate, read
-# at call time so tests can set it to 0 to force their Spark loops.
+# Size gates.  Each is read at call time, so a test that sets one to 0
+# forces every operator behind it onto its distributed path.
+#
+# Local (collect-to-driver) gate for connected components, PageRank,
+# Katz and label propagation: symmetrized edge lists at or under this
+# row count (≈500k undirected edges, ~16 MB as two int64 pandas
+# columns) are collected and solved on the driver — union-find for CC
+# (min-label propagation needs diameter/2 rounds of ~8 scheduled jobs
+# each, pure scheduling wall at small sizes, while a driver union-find
+# is O(E α(E))), numpy scatter-add rounds for the others.  Graphs over
+# the gate (the 100 TB regime) keep the distributed loops unchanged.
 LOCAL_CC_SYM_LIMIT = 1_000_000
+# Above this many nodes the per-round rank/distance frontier no longer
+# fits a broadcast (2M rows × 16 B ≈ 32 MB serialized, at the edge of
+# spark.sql.autoBroadcastJoinThreshold territory once task-deserialized
+# per core); the iteration flips to a co-partitioned shuffle join
+# against the src-partitioned persisted edge cache.
+BROADCAST_NODE_LIMIT = 2_000_000
+# SSSP gates on edge count (|V| ≤ 2|E|, and the edge count is already
+# materialized to pin the cache — no extra distinct-count job).
+BROADCAST_EDGE_LIMIT = 4_000_000
+# Above this many edges the full edge list no longer broadcasts; the
+# triangle join flips to the degree-ordered shuffle edge-iterator.
+TRIANGLE_BROADCAST_EDGE_LIMIT = 2_000_000
+# Borůvka's driver Kruskal tail takes over once the contracted component
+# graph holds at most this many cross-edges (~25 MB collected).
+BORUVKA_TAIL_EDGE_LIMIT = 500_000
 
 # Conf for materializing a lazily chained damped iteration (pagerank,
 # katz): AQE off, and since each round's broadcast is built from the
@@ -56,6 +74,30 @@ CHAINED_ITER_CONF = {
 }
 
 
+def _collect_under_gate(frame: DataFrame, gate: int, sym_per_row: int = 1):
+    """``frame`` as pandas if its ``sym_per_row`` × rows symmetric edge
+    rows fit ``gate`` and it holds no nulls, else None.  Callers pass a
+    module gate constant read at call time; a gate of 0 forces the Spark
+    path without a job.  A count decides first, so a graph above the
+    gate is never pulled to the driver.  Null ids or weights go to the
+    distributed path, whose null semantics (null group keys, skipped
+    join keys) the driver kernels do not replay — Arrow would hand them
+    over as NaN, and ``nan != nan`` never terminates a union-find."""
+    max_rows = gate // sym_per_row
+    if max_rows <= 0 or frame.count() > max_rows:
+        return None
+    pdf = frame.toPandas()
+    return None if pdf.isna().to_numpy().any() else pdf
+
+
+def _find(parent: dict, x):
+    """Root of ``x`` in a dict union-find, halving the path on the way."""
+    while parent.setdefault(x, x) != x:
+        parent[x] = parent[parent[x]]
+        x = parent[x]
+    return x
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "id_a",
@@ -63,7 +105,6 @@ def connected_components(
     vertices: DataFrame | None = None,
     vertex_col: str = "id",
     max_iter: int = 25,
-    local_threshold: int = LOCAL_CC_SYM_LIMIT,
 ) -> DataFrame:
     """Connected components over an undirected edge list.
 
@@ -84,13 +125,13 @@ def connected_components(
     small scale ARE the wall clock, without changing per-round shuffle
     volume at 100 TB (2×|E| messages per round either way).
 
-    Note on ``max_iter``: the sequential union-find tail (edge lists at
-    or under ``local_threshold``) always converges FULLY — it ignores
-    ``max_iter`` because full closure is the operator's contract and
-    every registered caller wants it.  A caller that genuinely needs
-    round-capped propagation must pass ``local_threshold=0`` to stay on
-    the distributed loop, where ``max_iter`` bounds the rounds.
-    """
+    Note on ``max_iter``: the sequential union-find tail (symmetric
+    edge lists at or under :data:`LOCAL_CC_SYM_LIMIT`, read at call
+    time) always converges FULLY — it ignores ``max_iter`` because full
+    closure is the operator's contract and every registered caller
+    wants it.  ``max_iter`` bounds the rounds of the distributed loop,
+    which runs above the gate, on edge lists holding nulls, and when
+    the gate is set to 0."""
     sym = edges.select(
         F.col(src).cast("long").alias("id"), F.col(dst).cast("long").alias("nbr")
     ).unionByName(
@@ -99,45 +140,46 @@ def connected_components(
         )
     )
     sym = sym.localCheckpoint()  # pin the edge list; reused every round
-    spark = edges.sparkSession
-    if sym.count() <= local_threshold:
-        # sequential tail: exact same (id, min-reachable-id) output —
-        # union-by-min-root keeps every root the minimum of its tree,
-        # so find(x) IS the min label the propagation converges to
-        pdf = sym.toPandas()
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in zip(pdf["id"].tolist(), pdf["nbr"].tolist()):
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        comp_rows = sorted((x, find(x)) for x in parent)
-        import pandas as pd
-
-        labels = spark.createDataFrame(
-            pd.DataFrame(comp_rows, columns=["id", "comp"]).astype("int64")
-            if comp_rows
-            else pd.DataFrame({"id": pd.Series(dtype="int64"),
-                               "comp": pd.Series(dtype="int64")}),
-            "id long, comp long",
+    pdf = _collect_under_gate(sym, LOCAL_CC_SYM_LIMIT)
+    if pdf is not None:
+        labels = _union_find_labels(edges.sparkSession, pdf)
+    else:
+        labels = _propagated_labels(sym, max_iter)
+    if vertices is not None:
+        isolated = (
+            vertices.select(F.col(vertex_col).cast("long").alias("id"))
+            .distinct()
+            .join(labels.select("id"), "id", "left_anti")
+            .select("id", F.col("id").alias("comp"))
         )
-        if vertices is not None:
-            isolated = (
-                vertices.select(
-                    F.col(vertex_col).cast("long").alias("id")
-                )
-                .distinct()
-                .join(labels.select("id"), "id", "left_anti")
-                .select("id", F.col("id").alias("comp"))
-            )
-            labels = labels.unionByName(isolated)
-        return labels
+        labels = labels.unionByName(isolated)
+    return labels
+
+
+def _union_find_labels(spark, pdf) -> DataFrame:
+    """(id, comp) from the collected (id, nbr) rows — the exact output
+    of the propagation: union-by-min-root keeps every root the minimum
+    of its tree, so find(x) IS the min label the rounds converge to."""
+    import pandas as pd
+
+    parent: dict[int, int] = {}
+    for a, b in zip(pdf["id"].tolist(), pdf["nbr"].tolist()):
+        ra, rb = _find(parent, a), _find(parent, b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    comp_rows = sorted((x, _find(parent, x)) for x in parent)
+    return spark.createDataFrame(
+        pd.DataFrame(comp_rows, columns=["id", "comp"]).astype("int64")
+        if comp_rows
+        else pd.DataFrame({"id": pd.Series(dtype="int64"),
+                           "comp": pd.Series(dtype="int64")}),
+        "id long, comp long",
+    )
+
+
+def _propagated_labels(sym: DataFrame, max_iter: int) -> DataFrame:
+    """Distributed min-label propagation over the checkpointed (id, nbr)
+    edge list, two hops per materialized round."""
     # only EDGE-ENDPOINT vertices ride the iteration: an isolated
     # vertex is a singleton component by definition, so it joins the
     # result afterwards as (id, id) instead of being shuffled through
@@ -176,52 +218,17 @@ def connected_components(
         # round 0 always changes labels on any non-empty edge list, so
         # the convergence probe (an extra job) starts at round 1
         if rnd > 0 and not lowered(new_labels, labels):
-            labels = new_labels
-            break
+            return new_labels
         labels = new_labels
-    else:
-        # out of rounds: warn only if one more hop would still lower a
-        # label (a round that changed labels may have been the last one)
-        if lowered(step(labels), labels):
-            warnings.warn(
-                f"connected_components: labels still changing after "
-                f"max_iter={max_iter} rounds; returning unconverged labels",
-                stacklevel=2,
-            )
-    if vertices is not None:
-        isolated = (
-            vertices.select(F.col(vertex_col).cast("long").alias("id"))
-            .distinct()
-            .join(labels.select("id"), "id", "left_anti")
-            .select("id", F.col("id").alias("comp"))
+    # out of rounds: warn only if one more hop would still lower a
+    # label (a round that changed labels may have been the last one)
+    if lowered(step(labels), labels):
+        warnings.warn(
+            f"connected_components: labels still changing after "
+            f"max_iter={max_iter} rounds; returning unconverged labels",
+            stacklevel=3,
         )
-        labels = labels.unionByName(isolated)
     return labels
-
-
-# Above this many nodes the per-round rank/distance frontier no longer
-# fits a broadcast (2M rows × 16 B ≈ 32 MB serialized, at the edge of
-# spark.sql.autoBroadcastJoinThreshold territory once task-deserialized
-# per core); the iteration flips to a co-partitioned shuffle join
-# against the src-partitioned persisted edge cache.
-BROADCAST_NODE_LIMIT = 2_000_000
-# SSSP gates on edge count (|V| ≤ 2|E|, and the edge count is already
-# materialized to pin the cache — no extra distinct-count job).
-BROADCAST_EDGE_LIMIT = 4_000_000
-
-
-def _collect_under_gate(frame: DataFrame, sym_per_row: int = 1):
-    """``frame`` as pandas if its ``sym_per_row`` × rows symmetric edge
-    rows fit :data:`LOCAL_CC_SYM_LIMIT` (read now; 0 forces the Spark
-    loops) and it holds no nulls, else None.  A count decides first, so
-    a graph above the gate is never pulled to the driver.  Null ids or
-    weights go to the distributed path, whose null semantics (null group
-    keys, skipped join keys) the driver kernels do not replay."""
-    max_rows = LOCAL_CC_SYM_LIMIT // sym_per_row
-    if max_rows <= 0 or frame.count() > max_rows:
-        return None
-    pdf = frame.toPandas()
-    return None if pdf.isna().to_numpy().any() else pdf
 
 
 def _factorize(*cols):
@@ -271,6 +278,39 @@ def _node_values(spark, ids, alive, x, id_type, col: str) -> DataFrame:
     )
 
 
+def _chained_rounds(fedges, x, n_nodes, iters, col, coef, base, scale):
+    """The Spark form of :func:`_linear_rounds`: ``iters`` rounds of
+    ``col[v] ← base + scale · Σ_{u→v} col[u]·coef`` over the persisted,
+    src-partitioned (src, dst, ``coef``) edge cache, starting from the
+    (id, ``col``) frame ``x``.  The vector joins as a BROADCAST while
+    ``n_nodes`` fits :data:`BROADCAST_NODE_LIMIT` (read now), else as a
+    SHUFFLE-HASH join that reuses the cache's ``src`` partitioning.
+    The vector is referenced exactly once per round (the join), so the
+    rounds chain into one lazy plan that materializes ONCE (round-12
+    rework: per-round persist+count drove 2 driver round trips per
+    round for the same shuffle/broadcast volume).  ``base`` is a Column
+    over the round's ``dst``; ``fedges`` is unpersisted on return."""
+    use_broadcast = n_nodes <= BROADCAST_NODE_LIMIT
+    try:
+        for _ in range(iters):
+            rhs = F.broadcast(x) if use_broadcast else x.hint("shuffle_hash")
+            acc = (
+                fedges.join(rhs, fedges.src == x.id)
+                .groupBy("dst")
+                .agg(F.sum(F.col(col) * F.col(coef)).alias("acc"))
+            )
+            x = acc.select(
+                F.col("dst").alias("id"),
+                (base + F.lit(scale) * F.col("acc")).alias(col),
+            )
+        # one materialization pins the result so multi-action callers
+        # never re-run the chain (and lineage is truncated)
+        with conf_override(fedges.sparkSession, CHAINED_ITER_CONF):
+            return x.localCheckpoint()
+    finally:
+        fedges.unpersist()
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -279,7 +319,6 @@ def pagerank(
     iters: int = 6,
     damping: float = 0.85,
     edge_partitions: int = 8,
-    broadcast_threshold: int = BROADCAST_NODE_LIMIT,
     seeds: list[int] | None = None,
 ) -> DataFrame:
     """Weighted PageRank over a DIRECTED edge list; returns (id, rank)
@@ -301,41 +340,41 @@ def pagerank(
     * ``|E| <= LOCAL_CC_SYM_LIMIT`` (read at call time) — LOCAL: one
       count decides, one job collects the edge list, and the rounds run
       on the driver as numpy ``bincount`` scatter-adds (``frac = w /
-      wout[src]``, ``acc = bincount(dst, rank[src]·frac)``).  Same rows and types as the Spark path; the
-      sums differ from it only in summation order (~1e-16 relative).
-    * ``n_nodes <= broadcast_threshold`` — BROADCAST: the
-      outdegree-normalized edge list is persisted once,
+      wout[src]``, ``acc = bincount(dst, rank[src]·frac)``).  Same rows
+      and types as the Spark path; the sums differ from it only in
+      summation order (~1e-16 relative).
+    * ``n_nodes <= BROADCAST_NODE_LIMIT`` (read at call time) —
+      BROADCAST: the outdegree-normalized edge list is persisted once,
       HASH-PARTITIONED ON ``src`` (normalization is a window over the
       src partitioning — one exchange, no aggregate + join-back); each
       round joins the BROADCAST rank vector map-side against that cache
       and runs a partial-agg'd keyed sum.
-    * ``n_nodes > broadcast_threshold`` (billion-node graphs) — SHUFFLE:
+    * ``n_nodes > BROADCAST_NODE_LIMIT`` (billion-node graphs) — SHUFFLE:
       the rank vector is SHUFFLE-HASH-joined: the edge cache's persisted
       ``src`` partitioning is reused as-is, so the only per-round data
       movement is one exchange of the |V|-row rank vector plus the
       keyed-sum shuffle.  No broadcast of anything O(|V|).
 
     The two Spark paths share the same edge cache and aggregation
-    expression, so per-partition partial sums combine in the same order
-    — results are bit-identical (asserted in tests/test_graph.py).  The
-    rank vector is referenced exactly once per round (the join), so all
-    rounds chain into ONE lazy plan that materializes once via a final
-    ``localCheckpoint`` — no per-round persist+count barriers, same
-    per-round shuffle/broadcast volume (round-12 rework).  AQE is
-    temporarily disabled (small cached jobs; per-stage re-planning
-    costs more latency than it saves) and ``spark.sql.broadcastTimeout``
-    is lifted for the chained execution: on the broadcast path each
-    round's broadcast build runs its whole multi-round prefix inside
-    one broadcast-exchange future, which the default 300 s timeout was
-    never sized for.  The edge cache is dropped before returning, so
-    repeated calls never accumulate cached blocks."""
+    expression (:func:`_chained_rounds`, shared with Katz), so
+    per-partition partial sums combine in the same order — results are
+    bit-identical (asserted in tests/test_graph.py).  The rounds chain
+    into ONE lazy plan that materializes once via a final
+    ``localCheckpoint``.  AQE is temporarily disabled (small cached
+    jobs; per-stage re-planning costs more latency than it saves) and
+    ``spark.sql.broadcastTimeout`` is lifted for the chained execution:
+    on the broadcast path each round's broadcast build runs its whole
+    multi-round prefix inside one broadcast-exchange future, which the
+    default 300 s timeout was never sized for.  The edge cache is
+    dropped before returning, so repeated calls never accumulate cached
+    blocks."""
     from pyspark.sql.window import Window
 
     spark = edges.sparkSession
     frame = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
     )
-    pdf = _collect_under_gate(frame)
+    pdf = _collect_under_gate(frame, LOCAL_CC_SYM_LIMIT)
     if pdf is not None:
         import numpy as np
 
@@ -379,9 +418,9 @@ def pagerank(
         # guard the 1/n_nodes init below (round-12 degenerate sweep)
         fedges.unpersist()
         return nodes.select("id", F.lit(0.0).alias("rank"))
-    use_broadcast = n_nodes <= broadcast_threshold
     if seeds is None:
         ranks = nodes.select("id", F.lit(1.0 / n_nodes).alias("rank"))
+        tele = F.lit((1.0 - damping) / n_nodes)
     else:
         ranks = nodes.select(
             "id",
@@ -389,74 +428,37 @@ def pagerank(
             .otherwise(F.lit(0.0))
             .alias("rank"),
         )
-    try:
-        # the rank vector is referenced exactly ONCE per round (the
-        # join), so the whole iteration chains lazily — one linear
-        # plan, no per-round recompute risk — and materializes ONCE at
-        # the end (round-12 rework: the previous per-round
-        # persist+count drove 2 driver round trips per round; same
-        # per-round shuffle/broadcast volume either way at any scale,
-        # but one job with k sequential stages has k-1 fewer
-        # driver-side barriers)
-        for _ in range(iters):
-            rhs = F.broadcast(ranks) if use_broadcast else ranks.hint(
-                "shuffle_hash"
-            )
-            acc = (
-                fedges.join(rhs, fedges.src == ranks.id)
-                .groupBy("dst")
-                .agg(F.sum(F.col("rank") * F.col("frac")).alias("acc"))
-            )
-            if seeds is None:
-                tele = F.lit((1.0 - damping) / n_nodes)
-            else:
-                tele = F.when(
-                    F.col("dst").isin(seeds),
-                    F.lit((1.0 - damping) / len(seeds)),
-                ).otherwise(F.lit(0.0))
-            ranks = acc.select(
-                F.col("dst").alias("id"),
-                (tele + F.lit(damping) * F.col("acc")).alias("rank"),
-            )
-        # one materialization pins the result so multi-action callers
-        # never re-run the chain (and lineage is truncated, as before)
-        with conf_override(spark, CHAINED_ITER_CONF):
-            ranks = ranks.localCheckpoint()
-    finally:
-        fedges.unpersist()
-    return ranks
-
-
-# Above this many edges the full edge list no longer broadcasts; the
-# triangle join flips to the degree-ordered shuffle edge-iterator.
-TRIANGLE_BROADCAST_EDGE_LIMIT = 2_000_000
+        tele = F.when(
+            F.col("dst").isin(seeds), F.lit((1.0 - damping) / len(seeds))
+        ).otherwise(F.lit(0.0))
+    return _chained_rounds(
+        fedges, ranks, n_nodes, iters, "rank", "frac", tele, damping
+    )
 
 
 def triangle_stats(
     pairs: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    broadcast_threshold: int = TRIANGLE_BROADCAST_EDGE_LIMIT,
 ) -> DataFrame:
     """Triangle count + global clustering coefficient over a CANONICAL
     (src < dst) undirected edge list.  One row out: (n_nodes, n_edges,
     n_triangles, clustering_coeff = 3·triangles / wedges).
 
-    Two regimes, selected by edge count:
+    Two regimes, selected by edge count against
+    :data:`TRIANGLE_BROADCAST_EDGE_LIMIT` (read at call time):
 
-    * ``|E| <= broadcast_threshold`` — canonical edges enumerate each
-      triangle exactly once via two equi-joins (the edge-iterator
-      algorithm) with both probe sides broadcast, so the wedge blow-up
-      stays map-side.
-    * ``|E| > broadcast_threshold`` — degree-ordered orientation +
-      shuffle edge-iterator (the standard scalable algorithm): every
-      edge is pointed from its lower-(degree, id) endpoint to the
-      higher one, capping per-node out-degree at O(√|E|); wedges are
-      generated by a self-join partitioned on the pivot node and closed
-      by a shuffle hash join keyed on the (b, c) endpoint pair.  No
-      broadcast of anything O(|E|); peak shuffle is the wedge set,
-      Σ out-deg² ≤ |E|^1.5 rows — the arboricity bound, not the naive
-      Σ deg² one.
+    * at or under it — canonical edges enumerate each triangle exactly
+      once via two equi-joins (the edge-iterator algorithm) with both
+      probe sides broadcast, so the wedge blow-up stays map-side.
+    * above it — degree-ordered orientation + shuffle edge-iterator
+      (the standard scalable algorithm): every edge is pointed from its
+      lower-(degree, id) endpoint to the higher one, capping per-node
+      out-degree at O(√|E|); wedges are generated by a self-join
+      partitioned on the pivot node and closed by a shuffle hash join
+      keyed on the (b, c) endpoint pair.  No broadcast of anything
+      O(|E|); peak shuffle is the wedge set, Σ out-deg² ≤ |E|^1.5 rows
+      — the arboricity bound, not the naive Σ deg² one.
 
     Both paths count each triangle exactly once (a triangle's three
     edges orient into exactly one out-degree-2 pivot under any strict
@@ -475,7 +477,7 @@ def triangle_stats(
         .groupBy("s")
         .agg(F.count(F.lit(1)).alias("d"))
     )
-    if n_edges <= broadcast_threshold:
+    if n_edges <= TRIANGLE_BROADCAST_EDGE_LIMIT:
         e1, e2, e3 = pairs.alias("e1"), pairs.alias("e2"), pairs.alias("e3")
         tri = (
             e1.join(F.broadcast(e2), F.col("e2.src") == F.col("e1.dst"))
@@ -549,7 +551,6 @@ def sssp(
     dst: str = "dst",
     cost: str = "cost",
     edge_partitions: int = 8,
-    broadcast_threshold: int = BROADCAST_EDGE_LIMIT,
 ) -> DataFrame:
     """Bounded Bellman-Ford single-source shortest paths over a
     DIRECTED weighted edge list: after K rounds the result is the exact
@@ -562,9 +563,10 @@ def sssp(
     Scale shape: same two-regime iterate skeleton as :func:`pagerank` —
     the edge list is persisted once, hash-partitioned on ``src``; each
     round relaxes every out-edge against the current distance frontier
-    and takes a keyed MIN (partial-agg'd).  Below ``broadcast_threshold``
-    edges (|V| ≤ 2|E|, so edge count — already materialized to pin the
-    cache — bounds the frontier too) the frontier is broadcast and the
+    and takes a keyed MIN (partial-agg'd).  At or under
+    :data:`BROADCAST_EDGE_LIMIT` edges (read at call time; |V| ≤ 2|E|,
+    so edge count — already materialized to pin the cache — bounds the
+    frontier too) the frontier is broadcast and the
     relax is map-side; above it the frontier is shuffle-hash-joined
     against the src-partitioned cache, so the only per-round movement
     is one exchange of the frontier itself — nothing O(|V|) ever lands
@@ -581,7 +583,7 @@ def sssp(
         .persist()
     )
     n_edges = e.count()
-    use_broadcast = n_edges <= broadcast_threshold
+    use_broadcast = n_edges <= BROADCAST_EDGE_LIMIT
     dist = spark.createDataFrame([(source, 0.0)], "id long, dist double")
     try:
         with conf_override(spark, {"spark.sql.adaptive.enabled": "false"}):
@@ -690,6 +692,7 @@ def label_propagation(
         edges.select(
             F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
         ),
+        LOCAL_CC_SYM_LIMIT,
         sym_per_row=2,
     )
     if pdf is not None:
@@ -837,7 +840,6 @@ def boruvka_mst(
     dst: str = "dst",
     weight: str = "w",
     max_rounds: int = 16,
-    tail_threshold: int = 500_000,
 ) -> DataFrame:
     """Minimum spanning forest via PARALLEL BORŮVKA — the MST
     algorithm that survives distribution (Kruskal's sorted-edge scan
@@ -857,11 +859,11 @@ def boruvka_mst(
     HYBRID TAIL (standard practice — each round costs a fixed number
     of jobs, so the log-depth tail of tiny rounds is pure scheduling
     overhead): once the CONTRACTED component graph holds ≤
-    ``tail_threshold`` cross-edges, it is collected and finished with
-    a sequential Kruskal union-find keyed on component ids — bounded
-    by the threshold, never by |V| or |E|, and gated by an explicit
-    count so a graph that is still big keeps iterating distributed.
-    The default gate is 500k one-cross-edge-per-component-pair rows
+    :data:`BORUVKA_TAIL_EDGE_LIMIT` (read at call time) cross-edges, it
+    is collected and finished with a sequential Kruskal union-find
+    keyed on component ids — bounded by the gate, never by |V| or |E|,
+    and decided by a count so a graph that is still big keeps iterating
+    distributed.  The gate is 500k one-cross-edge-per-component-pair rows
     (~25 MB collected — comfortably inside the 1 GB
     ``spark.driver.maxResultSize`` and a sub-second driver sort);
     raised from 100k in round 12 because the log-depth distributed
@@ -921,30 +923,19 @@ def boruvka_mst(
                     F.col("e.ew").alias("ew"), "ca", "cb")
             .localCheckpoint()
         )
-        n_cross = lab.count()
-        if n_cross == 0:
-            break
-        if n_cross <= tail_threshold:
-            # bounded driver tail: Kruskal union-find on COMPONENT ids.
-            # Kruskal's total order is computed by SPARK (a distributed
-            # sort beats a driver sort of Row objects ~5x at the 500k
-            # gate) and the rows land as Arrow-backed pandas columns —
-            # plain int arrays, not Row objects, for the tight loop.
-            pdf = (
-                lab.orderBy(
-                    "ew", F.least("a", "b"), F.greatest("a", "b")
-                )
-                .select("a", "b", "ew", "ca", "cb")
-                .toPandas()
-            )
+        # bounded driver tail: Kruskal union-find on COMPONENT ids.
+        # Kruskal's total order is computed by SPARK (a distributed sort
+        # beats a driver sort of Row objects ~5x at the 500k gate) and
+        # the rows land as Arrow-backed pandas columns — plain int
+        # arrays, not Row objects, for the tight loop.  An empty frame
+        # lands here too and returns the forest chosen so far.
+        pdf = _collect_under_gate(
+            lab.orderBy("ew", F.least("a", "b"), F.greatest("a", "b"))
+            .select("a", "b", "ew", "ca", "cb"),
+            BORUVKA_TAIL_EDGE_LIMIT,
+        )
+        if pdf is not None:
             parent: dict[int, int] = {}
-
-            def find(x: int) -> int:
-                while parent.setdefault(x, x) != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
             picked_rows = []
             for a_, b_, ew_, ca_, cb_ in zip(
                 pdf["a"].tolist(),
@@ -953,7 +944,7 @@ def boruvka_mst(
                 pdf["ca"].tolist(),
                 pdf["cb"].tolist(),
             ):
-                ra, rb = find(ca_), find(cb_)
+                ra, rb = _find(parent, ca_), _find(parent, cb_)
                 if ra != rb:
                     parent[ra] = rb
                     picked_rows.append((a_, b_, ew_))
@@ -964,6 +955,8 @@ def boruvka_mst(
                 tail_df if chosen is None else chosen.unionByName(tail_df)
             )
             return chosen.localCheckpoint()
+        if lab.isEmpty():  # a gate of 0 decides without counting
+            break
         cand = F.struct("ew", "a", "b", "ca", "cb")
         order = F.struct(
             F.col("ew"), F.least("a", "b"), F.greatest("a", "b")
@@ -1010,7 +1003,6 @@ def katz_centrality(
     weight: str = "w",
     iters: int = 6,
     beta: float = 1.0,
-    broadcast_threshold: int = BROADCAST_NODE_LIMIT,
 ) -> DataFrame:
     """Katz centrality over a DIRECTED weighted edge list: ``x ←
     β·1 + α·Aᵀx`` for ``iters`` synchronous rounds from x₀ = 0 —
@@ -1027,12 +1019,11 @@ def katz_centrality(
 
     Scale shape: the same three regimes as :func:`pagerank`.  LOCAL
     (``|E| <= LOCAL_CC_SYM_LIMIT``, read at call time): one count
-    decides, one job collects the edge list and the rounds run as driver-side ``bincount`` scatter-adds, α from the
-    same weighted in-degree maximum.  BROADCAST (``n_nodes <=
-    broadcast_threshold``) and SHUFFLE (above it): one persisted,
-    src-hash-partitioned edge cache and a per-round broadcast (or
-    shuffle-hash join) of the |V|-row score vector; the rounds chain
-    lazily and materialize once, and the edge cache is dropped before
+    decides, one job collects the edge list and the rounds run as
+    driver-side ``bincount`` scatter-adds, α from the same weighted
+    in-degree maximum.  BROADCAST (``n_nodes <= BROADCAST_NODE_LIMIT``)
+    and SHUFFLE (above it): PageRank's :func:`_chained_rounds` over one
+    persisted, src-hash-partitioned edge cache, dropped before
     returning, so repeated calls never accumulate cached blocks."""
     spark = edges.sparkSession
     frame = edges.select(
@@ -1040,7 +1031,7 @@ def katz_centrality(
         F.col(dst).alias("dst"),
         F.col(weight).cast("double").alias("ew"),
     )
-    pdf = _collect_under_gate(frame)
+    pdf = _collect_under_gate(frame, LOCAL_CC_SYM_LIMIT)
     if pdf is not None:
         import numpy as np
 
@@ -1054,15 +1045,7 @@ def katz_centrality(
         return _node_values(
             spark, ids, alive, x, frame.schema[1 if iters else 0].dataType, "score"
         )
-    fedges = (
-        edges.select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            F.col(weight).cast("double").alias("ew"),
-        )
-        .repartition(8, "src")
-        .persist()
-    )
+    fedges = frame.repartition(8, "src").persist()
     dmax = (
         fedges.groupBy("dst").agg(F.sum("ew").alias("wdeg"))
         .agg(F.max("wdeg"))
@@ -1077,31 +1060,7 @@ def katz_centrality(
         )
     alpha = 0.5 / float(dmax)
     nodes = fedges.select(F.col("src").alias("id")).distinct()
-    n_nodes = nodes.count()
-    use_broadcast = n_nodes <= broadcast_threshold
     scores = nodes.select("id", F.lit(0.0).alias("score"))
-    try:
-        # score vector referenced once per round → lazy-chain the
-        # rounds and materialize ONCE (the pagerank round-12 rework:
-        # same shuffle/broadcast volume, one driver barrier instead of
-        # 2·iters)
-        for _ in range(iters):
-            rhs = (
-                F.broadcast(scores)
-                if use_broadcast
-                else scores.hint("shuffle_hash")
-            )
-            acc = (
-                fedges.join(rhs, fedges.src == scores.id)
-                .groupBy("dst")
-                .agg(F.sum(F.col("score") * F.col("ew")).alias("acc"))
-            )
-            scores = acc.select(
-                F.col("dst").alias("id"),
-                (F.lit(beta) + F.lit(alpha) * F.col("acc")).alias("score"),
-            )
-        with conf_override(spark, CHAINED_ITER_CONF):
-            scores = scores.localCheckpoint()
-    finally:
-        fedges.unpersist()
-    return scores
+    return _chained_rounds(
+        fedges, scores, nodes.count(), iters, "score", "ew", F.lit(beta), alpha
+    )

@@ -31,6 +31,11 @@ from .registry import query
 BFS_SEEDS = 4
 BFS_ROUNDS = 3
 DELTA_SCALE = 1_000_000  # Brandes dependencies in micro-units
+# Local gate of the BFS σ build and the Brandes pass, read at call time
+# (0 forces the distributed loops): sym rows; ~64 MB of (src, dst) via
+# Arrow.  Separate from ``operators.graph.LOCAL_CC_SYM_LIMIT``, which
+# bounds a Python union-find rather than int64 numpy arrays.
+BFS_LOCAL_EDGE_GATE = 4_000_000
 
 _BFS_PREFIX_SQL = """
     ok AS (
@@ -80,35 +85,49 @@ def _bfs_prefix(k: int = BFS_SEEDS, rounds: int = BFS_ROUNDS) -> str:
     return _BFS_PREFIX_SQL.format(k=k) + "," + _bfs_rounds_sql(rounds)
 
 
-_SYM_ARRAYS: dict[tuple, tuple] = {}
+_SYM_ARRAYS: dict[tuple, tuple | None] = {}
 
 
 def _copurchase_sym_arrays(spark: SparkSession, sf_dir: str):
-    """(src, dst) int64 numpy arrays of the co-purchase sym edges,
-    Arrow-collected ONCE per process and fingerprint-keyed exactly like
-    the parquet edge snapshots (``queries_graph._edge_snapshot``): the
-    local BFS build and the local Brandes pass both consume them, and
-    re-collecting 2.4M rows per consumer was ~2 s each at bench scale.
-    Returns None above the local gate (the distributed paths never
-    collect).  Plain numpy arrays — invisible to ``clearCache``/the
-    bench drain, rebuilt on data-fingerprint change, never cross-run."""
+    """The BFS gate's verdict on the co-purchase sym edges
+    (:func:`_local_sym_arrays`), decided ONCE per process and
+    fingerprint-keyed exactly like the parquet edge snapshots
+    (``queries_graph._edge_snapshot``): the BFS build and the Brandes
+    pass both take it, so neither re-counts nor re-collects (2.4M rows
+    were ~2 s per consumer at bench scale).  The above-gate verdict
+    (None) is cached too.  Plain numpy arrays — invisible to
+    ``clearCache``/the bench drain, rebuilt on data-fingerprint change,
+    never cross-run."""
     import os as _os
-
-    import numpy as np
 
     from .queries_graph import _dataset_fingerprint
 
     key = (_os.path.abspath(sf_dir), _dataset_fingerprint(sf_dir))
     if key not in _SYM_ARRAYS:
-        sym = _copurchase_edges(spark, sf_dir)
-        if sym.count() > BFS_LOCAL_EDGE_GATE:
-            return None
-        pdf = sym.select("src", "dst").toPandas()
-        _SYM_ARRAYS[key] = (
-            pdf["src"].to_numpy(dtype=np.int64),
-            pdf["dst"].to_numpy(dtype=np.int64),
-        )
+        _SYM_ARRAYS[key] = _local_sym_arrays(_copurchase_edges(spark, sf_dir))
     return _SYM_ARRAYS[key]
+
+
+def _local_sym_arrays(sym: DataFrame):
+    """(src, dst) int64 numpy arrays of ``sym`` if it fits
+    :data:`BFS_LOCAL_EDGE_GATE` (read now) and holds no nulls, else
+    None — the distributed loops never collect."""
+    import numpy as np
+
+    from ..operators.graph import _collect_under_gate
+
+    pdf = _collect_under_gate(sym.select("src", "dst"), BFS_LOCAL_EDGE_GATE)
+    if pdf is None:
+        return None
+    return (
+        pdf["src"].to_numpy(dtype=np.int64),
+        pdf["dst"].to_numpy(dtype=np.int64),
+    )
+
+
+# ``sym_arrays`` default of the BFS/Brandes entry points: decide the gate
+# from ``sym`` itself (a caller holding a cached verdict passes it)
+_DECIDE = object()
 
 
 def _bfs_sigma(
@@ -144,9 +163,6 @@ def _bfs_sigma(
         F.col("node").alias("seed")
     )
     return sym, seeds, b
-
-
-BFS_LOCAL_EDGE_GATE = 4_000_000  # sym rows; ~64 MB of (src, dst) via Arrow
 
 
 def _bfs_sigma_local(
@@ -204,8 +220,7 @@ def bfs_sigma_from(
     rounds: int = BFS_ROUNDS,
     n_seeds: int = BFS_SEEDS,
     seeds: DataFrame | None = None,
-    local_threshold: int = BFS_LOCAL_EDGE_GATE,
-    sym_arrays: tuple | None = None,
+    sym_arrays=_DECIDE,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(sym, seeds, levels) where levels = (seed, node, dist, sigma)
     for every node reached within ``rounds`` hops of the ``n_seeds``
@@ -215,25 +230,21 @@ def bfs_sigma_from(
     ``sym`` must be symmetric (src, dst) and is assumed
     checkpointed/cheap to rescan.
 
-    Graphs at or under ``local_threshold`` sym rows run the driver-side
+    Graphs at or under :data:`BFS_LOCAL_EDGE_GATE` sym rows (read at
+    call time; 0 forces the distributed path) run the driver-side
     scatter-add form (:func:`_bfs_sigma_local`, identical exact-int
     labels); larger graphs — the 100 TB regime, and the 10x overflow
-    sweep — keep the distributed join-per-round loop.  Pass
-    ``local_threshold=0`` to force the distributed path;
-    ``sym_arrays`` short-circuits the collect with pre-collected
-    (src, dst) arrays (the per-process `_copurchase_sym_arrays` cache)."""
-    if local_threshold and (
-        sym_arrays is not None or sym.count() <= local_threshold
-    ):
+    sweep — keep the distributed join-per-round loop.  ``sym_arrays``
+    is a verdict already taken on ``sym`` (the per-process
+    :func:`_copurchase_sym_arrays` cache): (src, dst) arrays, or None
+    for the distributed loop; omitted, the gate decides here."""
+    if sym_arrays is _DECIDE:
+        sym_arrays = _local_sym_arrays(sym)
+    if sym_arrays is not None:
         import numpy as np
 
         spark = sym.sparkSession
-        if sym_arrays is not None:
-            e_src, e_dst = sym_arrays
-        else:
-            pdf = sym.select("src", "dst").toPandas()
-            e_src = pdf["src"].to_numpy(dtype=np.int64)
-            e_dst = pdf["dst"].to_numpy(dtype=np.int64)
+        e_src, e_dst = sym_arrays
         if seeds is None:
             # smallest-id seeds straight off the collected array — no
             # distinct+sort+limit Spark job (~1 s at bench scale)
@@ -441,9 +452,7 @@ def betweenness_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(20)
 
 
-def _brandes_local(
-    sym: DataFrame, b: DataFrame, sym_arrays: tuple | None = None
-) -> DataFrame:
+def _brandes_local(b: DataFrame, e_src, e_dst) -> DataFrame:
     """Driver-side mirror of the distributed backward pass: per seed
     and level, one vectorized exact-int64 ``(σ_v·(10⁶+δint_w)) // σ_w``
     scatter-add over the Arrow-collected edge/level arrays.  Emits
@@ -454,13 +463,7 @@ def _brandes_local(
     import numpy as np
     import pandas as pd
 
-    spark = sym.sparkSession
-    if sym_arrays is not None:
-        e_src, e_dst = sym_arrays
-    else:
-        pdf_e = sym.select("src", "dst").toPandas()
-        e_src = pdf_e["src"].to_numpy(dtype=np.int64)
-        e_dst = pdf_e["dst"].to_numpy(dtype=np.int64)
+    spark = b.sparkSession
     pdf_b = b.select("seed", "node", "dist", "sigma").toPandas()
     schema = "node long, dint long"
     if not len(pdf_b):
@@ -503,39 +506,42 @@ def _brandes_local(
 
 
 def brandes_fixed_point_from(
-    sym: DataFrame,
-    b: DataFrame,
-    local_threshold: int = BFS_LOCAL_EDGE_GATE,
-    sym_arrays: tuple | None = None,
+    sym: DataFrame, b: DataFrame, sym_arrays=_DECIDE
 ) -> DataFrame:
     """Backward dependency accumulation in micro-unit integers over the
     (seed, node, dist, sigma) BFS levels; returns every scored node
-    ordered by (bet_int desc, part_id).  Same hybrid gate as
-    :func:`bfs_sigma_from`: at or under ``local_threshold`` sym rows
-    the two level-joins run as driver-side scatter-adds
-    (:func:`_brandes_local`); above it — 100 TB, 10x overflow sweep —
-    the distributed join+checkpoint rounds are unchanged."""
-    if local_threshold and (
-        sym_arrays is not None or sym.count() <= local_threshold
-    ):
-        allints = _brandes_local(sym, b, sym_arrays)
-        return (
-            allints.groupBy("node")
-            .agg(F.sum("dint").cast("long").alias("bet_int"))
-            .select(
-                F.col("node").alias("part_id"),
-                "bet_int",
-                (
-                    F.round(
-                        F.col("bet_int").cast("double") / DELTA_SCALE
-                        - 1e-9,
-                        4,
-                    )
-                    + 0.0
-                ).alias("betweenness"),
-            )
-            .orderBy(F.desc("bet_int"), "part_id")
+    ordered by (bet_int desc, part_id).  Same hybrid gate and
+    ``sym_arrays`` verdict as :func:`bfs_sigma_from`: at or under
+    :data:`BFS_LOCAL_EDGE_GATE` sym rows the two level-joins run as
+    driver-side scatter-adds (:func:`_brandes_local`); above it — 100
+    TB, 10x overflow sweep — the distributed join+checkpoint rounds are
+    unchanged."""
+    if sym_arrays is _DECIDE:
+        sym_arrays = _local_sym_arrays(sym)
+    if sym_arrays is not None:
+        allints = _brandes_local(b, *sym_arrays)
+    else:
+        allints = _brandes_distributed(sym, b)
+    return (
+        allints.groupBy("node")
+        .agg(F.sum("dint").cast("long").alias("bet_int"))
+        .select(
+            F.col("node").alias("part_id"),
+            "bet_int",
+            (
+                F.round(
+                    F.col("bet_int").cast("double") / DELTA_SCALE - 1e-9, 4
+                )
+                + 0.0
+            ).alias("betweenness"),
         )
+        .orderBy(F.desc("bet_int"), "part_id")
+    )
+
+
+def _brandes_distributed(sym: DataFrame, b: DataFrame) -> DataFrame:
+    """(node, dint) rows of the backward pass as Spark level-joins, one
+    localCheckpointed round per level."""
     lvl = {
         d: b.filter(F.col("dist") == d).select(
             "seed", "node", "sigma"
@@ -583,22 +589,7 @@ def brandes_fixed_point_from(
         )
         deltas.append(d)
         prev = d
-    allints = deltas[0].unionByName(deltas[1])
-    return (
-        allints.groupBy("node")
-        .agg(F.sum("dint").cast("long").alias("bet_int"))
-        .select(
-            F.col("node").alias("part_id"),
-            "bet_int",
-            (
-                F.round(
-                    F.col("bet_int").cast("double") / DELTA_SCALE - 1e-9, 4
-                )
-                + 0.0
-            ).alias("betweenness"),
-        )
-        .orderBy(F.desc("bet_int"), "part_id")
-    )
+    return deltas[0].unionByName(deltas[1])
 
 
 # --------------------------------------------------------------------------

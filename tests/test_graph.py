@@ -19,6 +19,19 @@ def _comps(df) -> dict[int, int]:
     return {r["id"]: r["comp"] for r in df.collect()}
 
 
+def _gate_zero(monkeypatch, gate, op, *args, **kwargs):
+    """``op`` called with the ``operators.graph`` size gate ``gate`` at 0
+    (the gates are module constants read at call time)."""
+    with monkeypatch.context() as m:
+        m.setattr(graph, gate, 0)
+        return op(*args, **kwargs)
+
+
+def _spark_loop(monkeypatch, op, *args, **kwargs):
+    """``op`` called with the local edge gate at 0 (its Spark loop)."""
+    return _gate_zero(monkeypatch, "LOCAL_CC_SYM_LIMIT", op, *args, **kwargs)
+
+
 def test_chain_and_isolated_vertices(spark):
     # 1-2-3-4-5 chain (min label needs 4 propagation rounds), a pair
     # 10-11, and isolated vertex 99 supplied via `vertices`
@@ -41,10 +54,10 @@ def test_cycle_and_cross_links(spark):
     assert _comps(out) == {1: 1, 2: 1, 3: 1, 7: 1}
 
 
-def test_max_iter_caps_rounds(spark):
+def test_max_iter_caps_rounds(spark, monkeypatch):
     # one materialized round = TWO propagation hops: with max_iter=1 the
     # far end of a 5-chain moves exactly two hops, not to convergence.
-    # local_threshold=0 forces the DISTRIBUTED loop (the sequential
+    # A local gate of 0 forces the DISTRIBUTED loop (the sequential
     # union-find tail always converges fully; round capping is a
     # distributed-path contract).
     edges = spark.createDataFrame(
@@ -52,13 +65,13 @@ def test_max_iter_caps_rounds(spark):
     )
     with pytest.warns(UserWarning, match="max_iter=1"):
         out = _comps(
-            connected_components(edges, max_iter=1, local_threshold=0)
+            _spark_loop(monkeypatch, connected_components, edges, max_iter=1)
         )
     assert out[1] == 1 and out[2] == 1 and out[3] == 1
     assert out[5] == 3  # two hops reached 3's initial label, not 1
 
 
-def test_max_iter_converged_star_does_not_warn(spark):
+def test_max_iter_converged_star_does_not_warn(spark, monkeypatch):
     # a star converges within its one round: the loop runs out of
     # rounds, but no further hop lowers a label, so nothing is reported
     edges = spark.createDataFrame(
@@ -67,13 +80,13 @@ def test_max_iter_converged_star_does_not_warn(spark):
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         out = _comps(
-            connected_components(edges, max_iter=1, local_threshold=0)
+            _spark_loop(monkeypatch, connected_components, edges, max_iter=1)
         )
     assert set(out.values()) == {1}
     assert not [w for w in caught if "connected_components" in str(w.message)]
 
 
-def test_local_tail_matches_distributed(spark):
+def test_local_tail_matches_distributed(spark, monkeypatch):
     # the size-gated union-find tail must emit the identical
     # (id, min-reachable-id) labels as the distributed propagation,
     # isolated vertices included
@@ -86,12 +99,31 @@ def test_local_tail_matches_distributed(spark):
         connected_components(edges, vertices=verts, vertex_col="doc_id")
     )
     dist = _comps(
-        connected_components(
-            edges, vertices=verts, vertex_col="doc_id", local_threshold=0
+        _spark_loop(
+            monkeypatch,
+            connected_components,
+            edges,
+            vertices=verts,
+            vertex_col="doc_id",
         )
     )
     assert local == dist == {
         1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10, 99: 99
+    }
+    # a null endpoint: Arrow would hand the driver tail a NaN, which
+    # never finds its root (nan != nan), so the default gate must send
+    # the frame to the distributed loop and get the same rows
+    edges = spark.createDataFrame(
+        [(1, 2), (2, None), (3, 4)], "id_a long, id_b long"
+    )
+    local = sorted(connected_components(edges).collect(), key=str)
+    dist = sorted(
+        _spark_loop(monkeypatch, connected_components, edges).collect(),
+        key=str,
+    )
+    assert local == dist
+    assert _comps(connected_components(edges)) == {
+        1: 1, 2: 1, 3: 3, 4: 3, None: 1
     }
 
 
@@ -195,7 +227,7 @@ def test_kcore_peeling(spark):
 
 
 def test_pagerank_shuffle_path_bit_identical(spark, monkeypatch):
-    """broadcast_threshold=0 forces the large-graph shuffle-hash path;
+    """A node gate of 0 forces the large-graph shuffle-hash path;
     ranks must be BIT-identical to the broadcast path (same edge cache
     partitioning -> same partial-sum combine order).  A local edge gate
     of 0 keeps both calls off the driver-side kernel."""
@@ -208,7 +240,9 @@ def test_pagerank_shuffle_path_bit_identical(spark, monkeypatch):
     bc = {r["id"]: r["rank"] for r in pagerank(edges, iters=6).collect()}
     sh = {
         r["id"]: r["rank"]
-        for r in pagerank(edges, iters=6, broadcast_threshold=0).collect()
+        for r in _gate_zero(
+            monkeypatch, "BROADCAST_NODE_LIMIT", pagerank, edges, iters=6
+        ).collect()
     }
     assert bc == sh  # exact float equality, not approx
     assert abs(sum(sh.values()) - 1.0) < 1e-9
@@ -241,7 +275,7 @@ def test_pagerank_shuffle_path_plan_has_no_broadcast(spark):
     fedges.unpersist()
 
 
-def test_sssp_shuffle_path_bit_identical(spark):
+def test_sssp_shuffle_path_bit_identical(spark, monkeypatch):
     from stream_processing_with_flink_study_spark.operators.graph import sssp
 
     edges = spark.createDataFrame(
@@ -251,16 +285,16 @@ def test_sssp_shuffle_path_bit_identical(spark):
     bc = {r.id: r.dist for r in sssp(edges, source=1, rounds=3).collect()}
     sh = {
         r.id: r.dist
-        for r in sssp(
-            edges, source=1, rounds=3, broadcast_threshold=0
+        for r in _gate_zero(
+            monkeypatch, "BROADCAST_EDGE_LIMIT", sssp, edges, source=1, rounds=3
         ).collect()
     }
     assert bc == sh
     assert sh[4] == 7.0
 
 
-def test_triangle_stats_shuffle_path_exact(spark):
-    """Degree-ordered shuffle edge-iterator (broadcast_threshold=0)
+def test_triangle_stats_shuffle_path_exact(spark, monkeypatch):
+    """Degree-ordered shuffle edge-iterator (edge gate at 0)
     reproduces the broadcast path's exact counts on K4, K5-minus-edge,
     and a graph with skewed degrees (star + triangle)."""
     from stream_processing_with_flink_study_spark.operators.graph import (
@@ -283,7 +317,9 @@ def test_triangle_stats_shuffle_path_exact(spark):
     for name, es in cases.items():
         df = spark.createDataFrame(es, "src long, dst long")
         fast = triangle_stats(df).collect()[0]
-        scale = triangle_stats(df, broadcast_threshold=0).collect()[0]
+        scale = _gate_zero(
+            monkeypatch, "TRIANGLE_BROADCAST_EDGE_LIMIT", triangle_stats, df
+        ).collect()[0]
         assert fast.asDict() == scale.asDict(), name
         assert scale.n_triangles == expect[name], name
 
@@ -360,13 +396,6 @@ def test_edge_snapshot_fingerprint_invalidation(tmp_path):
 # a gate of 0 forces the Spark loops, so every test below runs both
 # sides of the gate on the same hand graph.
 # ---------------------------------------------------------------------------
-
-
-def _spark_loop(monkeypatch, op, *args, **kwargs):
-    """``op`` called with the local edge gate at 0 (its Spark loop)."""
-    with monkeypatch.context() as m:
-        m.setattr(graph, "LOCAL_CC_SYM_LIMIT", 0)
-        return op(*args, **kwargs)
 
 
 def _random_sym(spark, seed=7, n=40, m=90):
@@ -488,27 +517,65 @@ def test_iterative_operators_empty_edge_list(spark, monkeypatch):
     assert _spark_loop(monkeypatch, pagerank, empty, seeds=[]).count() == 0
 
 
-LOCAL_GATE_QUERIES = [
+# Every registered query behind a size gate.  Each runs at the default
+# gates and with every gate at 0; the PageRank/Katz queries also run
+# with only the local gate at 0, which is their broadcast regime.
+GATED_QUERIES = [
     "pagerank_cosupplier",
     "personalized_pagerank",
     "katz_centrality_cosupplier",
     "lpa_communities",
     "textrank_keywords",
+    "near_dup_clusters",
+    "embedding_dedup_clusters",
+    "graph_robustness_attack",
+    "identity_stitch_components",
+    "dbscan_grid_clusters",
+    "triangle_count_graph",
+    "sssp_cosupplier",
+    "mst_cosupplier",
+    "closeness_bfs_seeds",
+    "eccentricity_seeds",
+    "betweenness_fixed_point",
+]
+BROADCAST_REGIME_QUERIES = GATED_QUERIES[:3]
+GATE_CONSTANTS = [
+    "LOCAL_CC_SYM_LIMIT",
+    "BROADCAST_NODE_LIMIT",
+    "BROADCAST_EDGE_LIMIT",
+    "TRIANGLE_BROADCAST_EDGE_LIMIT",
+    "BORUVKA_TAIL_EDGE_LIMIT",
 ]
 
 
-@pytest.mark.parametrize("gate", ["default", "forced_distributed"])
-@pytest.mark.parametrize("name", LOCAL_GATE_QUERIES)
+@pytest.mark.parametrize(
+    "name,gate",
+    [(n, g) for n in GATED_QUERIES for g in ("default", "forced_distributed")]
+    + [(n, "broadcast") for n in BROADCAST_REGIME_QUERIES],
+)
 def test_graph_queries_match_oracle_both_sides_of_gate(
     spark, duck_medium, monkeypatch, name, gate
 ):
     from stream_processing_with_flink_study_spark import plans
+    from stream_processing_with_flink_study_spark.plans import (
+        queries_graph,
+        queries_graphdist,
+    )
 
     from .conftest import SF_MEDIUM
     from .util import assert_matches_oracle
 
-    if gate == "forced_distributed":
+    if gate == "broadcast":
         monkeypatch.setattr(graph, "LOCAL_CC_SYM_LIMIT", 0)
+    elif gate == "forced_distributed":
+        for const in GATE_CONSTANTS:
+            monkeypatch.setattr(graph, const, 0)
+        monkeypatch.setattr(queries_graphdist, "BFS_LOCAL_EDGE_GATE", 0)
+        # per-process caches built at the default gates (the BFS levels,
+        # the BFS gate verdict) must not stand in for the forced run
+        monkeypatch.setattr(queries_graph, "_EDGE_SNAPSHOTS", {})
+        monkeypatch.setattr(queries_graph, "_SCRATCH", [])
+        monkeypatch.setattr(queries_graphdist, "_SYM_ARRAYS", {})
     try:
         assert_matches_oracle(
             plans.QUERIES[name](spark, SF_MEDIUM),

@@ -7,8 +7,10 @@ from __future__ import annotations
 
 from fractions import Fraction
 
+import pytest
 from pyspark.sql import functions as F
 
+from stream_processing_with_flink_study_spark.plans import queries_graphdist
 from stream_processing_with_flink_study_spark.plans.queries_graphdist import (
     BFS_ROUNDS,
     DELTA_SCALE,
@@ -163,7 +165,14 @@ def test_bfs_sigma_counts_paths(spark):
     assert rows[2] == (2, 3)  # three shortest paths via 10/11/12
 
 
-def test_bfs_local_matches_distributed(spark):
+def _forced(monkeypatch, op, *args, **kwargs):
+    """``op`` called with ``BFS_LOCAL_EDGE_GATE`` at 0 (its Spark loop)."""
+    with monkeypatch.context() as m:
+        m.setattr(queries_graphdist, "BFS_LOCAL_EDGE_GATE", 0)
+        return op(*args, **kwargs)
+
+
+def test_bfs_local_matches_distributed(spark, monkeypatch):
     """The driver-side scatter-add BFS (under BFS_LOCAL_EDGE_GATE) must
     emit the IDENTICAL (seed, node, dist, sigma) set as the distributed
     join-per-round loop — the connected-components hybrid-tail pin,
@@ -177,7 +186,7 @@ def test_bfs_local_matches_distributed(spark):
     ]
     sym = _sym(spark, pairs)
     _, _, b_local = bfs_sigma_from(sym)  # ≤ gate → driver path
-    _, _, b_dist = bfs_sigma_from(sym, local_threshold=0)  # forced loop
+    _, _, b_dist = _forced(monkeypatch, bfs_sigma_from, sym)  # forced loop
     got_local = {
         (r["seed"], r["node"]): (r["dist"], r["sigma"])
         for r in b_local.collect()
@@ -190,7 +199,7 @@ def test_bfs_local_matches_distributed(spark):
     assert got_local  # non-vacuous
 
 
-def test_brandes_local_matches_distributed(spark):
+def test_brandes_local_matches_distributed(spark, monkeypatch):
     """Same pin for the backward pass: the driver-side scatter-add
     Brandes must emit the identical (part_id, bet_int, betweenness)
     rows — including WHICH zero-score nodes appear (the distributed
@@ -201,11 +210,34 @@ def test_brandes_local_matches_distributed(spark):
         (2, 3), (100, 101), (101, 102),
     ]
     sym = _sym(spark, pairs)
-    _, _, b = bfs_sigma_from(sym, local_threshold=0)
+    _, _, b = _forced(monkeypatch, bfs_sigma_from, sym)
     rows_local = brandes_fixed_point_from(sym, b).collect()
-    rows_dist = brandes_fixed_point_from(sym, b, local_threshold=0).collect()
+    rows_dist = _forced(
+        monkeypatch, brandes_fixed_point_from, sym, b
+    ).collect()
     as_tuples = lambda rows: [  # noqa: E731
         (r["part_id"], r["bet_int"], r["betweenness"]) for r in rows
     ]
     assert as_tuples(rows_local) == as_tuples(rows_dist)
     assert rows_local  # non-vacuous
+
+
+@pytest.mark.parametrize("gate", [0, 1])
+def test_sym_arrays_verdict_cached_above_gate(spark, monkeypatch, gate):
+    """The BFS gate's above-gate verdict (None) is cached like the
+    arrays: a second ``_copurchase_sym_arrays`` call launches no Spark
+    job.  At gate 1 the first verdict comes from a real count."""
+    from .conftest import SF_MEDIUM
+
+    def next_job():
+        return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+    monkeypatch.setattr(queries_graphdist, "BFS_LOCAL_EDGE_GATE", gate)
+    monkeypatch.setattr(queries_graphdist, "_SYM_ARRAYS", {})
+    first = next_job()
+    assert queries_graphdist._copurchase_sym_arrays(spark, SF_MEDIUM) is None
+    if gate:
+        assert next_job() > first  # the verdict took a count
+    before = next_job()
+    assert queries_graphdist._copurchase_sym_arrays(spark, SF_MEDIUM) is None
+    assert next_job() == before

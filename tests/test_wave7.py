@@ -289,10 +289,11 @@ def test_boruvka_mst_matches_sequential_kruskal(spark):
     assert sum(r.ew for r in mst) == pytest.approx(kruskal_w, rel=1e-9)
 
 
-def test_boruvka_forced_distributed_equals_tail_path(spark):
-    """With tail_threshold=0 every round runs distributed (no driver
+def test_boruvka_forced_distributed_equals_tail_path(spark, monkeypatch):
+    """With the tail gate at 0 every round runs distributed (no driver
     Kruskal); the forest weight must match the hybrid default and the
     hand-verified MST."""
+    from stream_processing_with_flink_study_spark.operators import graph
     from stream_processing_with_flink_study_spark.operators.graph import (
         boruvka_mst,
     )
@@ -304,9 +305,9 @@ def test_boruvka_forced_distributed_equals_tail_path(spark):
         ],
         "src long, dst long, w double",
     )
-    forced = sorted(
-        (r.a, r.b, r.ew) for r in boruvka_mst(edges, tail_threshold=0).collect()
-    )
+    with monkeypatch.context() as m:
+        m.setattr(graph, "BORUVKA_TAIL_EDGE_LIMIT", 0)
+        forced = sorted((r.a, r.b, r.ew) for r in boruvka_mst(edges).collect())
     hybrid = sorted(
         (r.a, r.b, r.ew) for r in boruvka_mst(edges).collect()
     )

@@ -124,40 +124,50 @@ def main() -> None:
     reaches = {v["sssp_reach"] for v in out.values()}
     assert len(reaches) == 1, f"SSSP reach changed with copies: {out}"
 
-    # Forced-shuffle-path run at the largest mult: broadcast_threshold=0
-    # flips pagerank/sssp to the co-partitioned shuffle-hash join path
-    # (the billion-node regime); invariants must hold there too.
-    big = max(int(m) for m in args.mults.split(","))
-    t0 = time.perf_counter()
-    e = edges_for(spark, base, big).persist()
-    n_edges = e.count()
-    sym = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
-    )
-    ranks = pagerank(
-        sym, iters=args.iters, edge_partitions=8 * big, broadcast_threshold=0
-    )
-    mass = ranks.agg(F.sum("rank")).first()[0]
-    srcnode = int(e.agg(F.min("src")).first()[0])
-    costed = sym.withColumn("cost", 1.0 / F.col("w")).select(
-        "src", "dst", "cost"
-    )
-    n_reach = sssp(
-        costed, source=srcnode, rounds=3, broadcast_threshold=0
-    ).count()
-    sec = round(time.perf_counter() - t0, 2)
-    e.unpersist()
-    # triangle counting: the degree-ordered shuffle edge-iterator must
-    # reproduce the broadcast path's exact count on the scaled graph
-    # (disjoint copies => count scales exactly linearly too)
+    # Forced-shuffle-path run at the largest mult: every size gate of
+    # operators.graph set to 0 flips pagerank/sssp/triangle_stats to
+    # their co-partitioned shuffle paths (the billion-node regime) and
+    # keeps pagerank off its driver kernel; invariants must hold there
+    # too.  The gates are module constants read at call time.
+    from stream_processing_with_flink_study_spark.operators import graph
     from stream_processing_with_flink_study_spark.operators.graph import (
         triangle_stats,
     )
 
+    gates = (
+        "LOCAL_CC_SYM_LIMIT",
+        "BROADCAST_NODE_LIMIT",
+        "BROADCAST_EDGE_LIMIT",
+        "TRIANGLE_BROADCAST_EDGE_LIMIT",
+    )
+    saved = {g: getattr(graph, g) for g in gates}
+    big = max(int(m) for m in args.mults.split(","))
+    try:
+        for g in gates:
+            setattr(graph, g, 0)
+        t0 = time.perf_counter()
+        e = edges_for(spark, base, big).persist()
+        n_edges = e.count()
+        sym = e.union(
+            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+        )
+        ranks = pagerank(sym, iters=args.iters, edge_partitions=8 * big)
+        mass = ranks.agg(F.sum("rank")).first()[0]
+        srcnode = int(e.agg(F.min("src")).first()[0])
+        costed = sym.withColumn("cost", 1.0 / F.col("w")).select(
+            "src", "dst", "cost"
+        )
+        n_reach = sssp(costed, source=srcnode, rounds=3).count()
+        sec = round(time.perf_counter() - t0, 2)
+        e.unpersist()
+        # triangle counting: the degree-ordered shuffle edge-iterator
+        # must reproduce the broadcast path's exact count on the scaled
+        # graph (disjoint copies => count scales exactly linearly too)
+        tri_sh = triangle_stats(e, src="src", dst="dst").collect()[0]
+    finally:
+        for g, v in saved.items():
+            setattr(graph, g, v)
     tri_bc = triangle_stats(e, src="src", dst="dst").collect()[0]
-    tri_sh = triangle_stats(
-        e, src="src", dst="dst", broadcast_threshold=0
-    ).collect()[0]
     forced = {
         "edges": n_edges,
         "sec": sec,
