@@ -32,7 +32,15 @@ windows / lag battery — ONE exchange + ONE sort regardless of N,
 linear in events, the 100 TB shape; the naive alternative is N-1
 self-joins) and a streaming twin over ``applyInPandasWithState`` with
 O(1) state per key (``relaxed``: N-1 timestamps; ``strict``: the last
-N-1 events), so per-key state is independent of history length.
+N-1 events), so per-key state is independent of history length.  The
+greedy twins run once per hash bucket of the key, not once per key
+(:func:`..streaming.stateful.bucketed_keyed_scan`): per-key state lives
+in typed arrays of one state row per bucket, the stateful stage makes
+at most ``B`` (build-time ``spark.sql.shuffle.partitions``) pandas
+calls per micro-batch, and a touched bucket rewrites O(keys per
+bucket) of state per batch — the price of the columnar bucket row
+against a per-key ``transformWithStateInPandas`` MapState layout,
+which would write only the touched keys.
 
 Match ordering is (ts, step-rank, tiebreak); predecessors are taken
 from STRICTLY earlier positions, so one event never satisfies two
@@ -52,6 +60,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..streaming.stateful import bucketed_keyed_scan
 
 
 def _step_conditions(
@@ -312,125 +322,132 @@ def match_pattern(
     return out.filter(qual).select(*out_cols)
 
 
+def _segments(starts: np.ndarray, n_rows: int) -> tuple[np.ndarray, np.ndarray]:
+    """Per-row key-segment index, and each segment's last row."""
+    ends = np.append(starts[1:], n_rows) - 1
+    return np.repeat(np.arange(len(starts)), ends - starts + 1), ends
+
+
 def _relaxed_scan(
-    ord_us: np.ndarray,
-    type_idx: list[np.ndarray],
-    seeds: list[int | None],
+    ords: np.ndarray,
+    flags: list[np.ndarray],
+    starts: np.ndarray,
+    seed_ts: np.ndarray,
+    seed_has: np.ndarray,
     step_us: int,
     quant: list[str] | None = None,
     total_us: int | None = None,
-) -> tuple[np.ndarray, list[int | None]]:
-    """Vectorized relaxed-contiguity scan over one key's sorted batch:
-    N-1 chained forward-fills, each the "latest qualified level-k
-    timestamp" visible at every STRICTLY EARLIER position (shift(1)).
-    ``quant`` marks optional steps (skip path to the level below);
-    ``total_us`` bounds completion − bound-first-step span."""
-    nan = np.nan
-    ordf = ord_us.astype("float64")
-    qual = type_idx[0]
-    new_seeds: list[int | None] = []
-    prevs: list[np.ndarray] = []
-    hits = np.zeros(0, dtype="int64")
-    for i in range(1, len(type_idx) + 1):
-        seed = seeds[i - 1]
-        filled = (
-            pd.Series(np.where(qual, ordf, nan))
-            .ffill()
-            .fillna(nan if seed is None else float(seed))
-            .to_numpy()
-        )
-        new_seeds.append(None if np.isnan(filled[-1]) else int(filled[-1]))
-        prev = np.empty_like(filled)
-        prev[0] = nan if seed is None else float(seed)
-        prev[1:] = filled[:-1]
-        prevs.append(prev)
-        if i == len(type_idx):
-            break
-        with np.errstate(invalid="ignore"):
-            q = prev >= ordf - step_us
-            if quant is not None and quant[i - 1] == "optional":
-                q = q | (prevs[i - 2] >= ordf - step_us)
-            qual = type_idx[i] & q
-        if i == len(type_idx) - 1:
-            with np.errstate(invalid="ignore"):
-                hits = np.flatnonzero(qual)
-    if total_us is not None and len(hits):
-        with np.errstate(invalid="ignore"):
-            hits = hits[ord_us[hits] - prevs[0][hits] <= total_us]
-    return hits, new_seeds
+    ids: np.ndarray | None = None,
+    seed_ids: np.ndarray | None = None,
+) -> tuple[np.ndarray, list[list[int]] | None, tuple[np.ndarray, ...]]:
+    """Segmented relaxed-contiguity scan over a bucket's rows, sorted by
+    key then (ts, rank, tiebreak); ``starts`` are the first rows of the
+    key segments.  Level k's binding at a row is the latest level-k
+    qualifier at a STRICTLY EARLIER position of the same key — a
+    forward-fill of qualifying positions (``np.maximum.accumulate``)
+    masked by the row's segment start, falling back to the key's
+    carried ``(seed_ts, seed_has)`` (shape ``(N-1, keys)``).  ``quant``
+    marks optional steps (skip path to the level below); ``total_us``
+    bounds completion minus bound-first-step span.  With ``ids`` (chain
+    mode) every hit also reports the bound id per level; ids stay int64
+    end to end, so ids above 2**53 survive, and an optional step's slot
+    is kept only when its binding is in-window of the completion — the
+    batch form's ``concat_ws`` null-skip.  Returns hit rows, chains
+    (or None) and the new per-key ``(ts, has, ids)`` state."""
+    n = len(flags)
+    rows = np.arange(len(ords))
+    seg, ends = _segments(starts, len(ords))
+    seg_start = starts[seg]
+    new_ts, new_has = np.empty_like(seed_ts), np.empty_like(seed_has)
+    new_ids = None if ids is None else np.empty_like(seed_ids)
+    bound_ts, bound_has, bound_ids, valid = [], [], [], []
+    qual = flags[0]
+    for lvl in range(n - 1):
+        last = np.maximum.accumulate(np.where(qual, rows, -1))
+        before = np.append(-1, last[:-1])
+        own = before >= seg_start
+        at = np.where(own, before, 0)
+        b_ts = np.where(own, ords[at], seed_ts[lvl][seg])
+        b_has = own | seed_has[lvl][seg]
+        # state carried out: latest qualifier up to the segment's last row
+        end = last[ends]
+        e_own = end >= starts
+        new_ts[lvl] = np.where(e_own, ords[np.maximum(end, 0)], seed_ts[lvl])
+        new_has[lvl] = e_own | seed_has[lvl]
+        if ids is not None:
+            bound_ids.append(np.where(own, ids[at], seed_ids[lvl][seg]))
+            new_ids[lvl] = np.where(e_own, ids[np.maximum(end, 0)], seed_ids[lvl])
+        bound_ts.append(b_ts)
+        bound_has.append(b_has)
+        valid.append(b_has & (b_ts >= ords - step_us))
+        q = valid[lvl]
+        if quant is not None and quant[lvl] == "optional":
+            q = q | valid[lvl - 1]  # skip path: connect to the level below
+        qual = flags[lvl + 1] & q
+    hits = np.flatnonzero(qual)
+    if total_us is not None:
+        hits = hits[bound_has[0][hits] & (ords[hits] - bound_ts[0][hits] <= total_us)]
+    chains = None
+    if ids is not None:
+        chains = [
+            [
+                int(bound_ids[m][h])
+                for m in range(n - 1)
+                if quant is None or quant[m] != "optional" or valid[m][h]
+            ]
+            + [int(ids[h])]
+            for h in hits
+        ]
+    return hits, chains, (new_ts, new_has, new_ids)
 
 
-def _relaxed_scan_chain(
-    ord_us: np.ndarray,
+def _strict_scan(
+    ords: np.ndarray,
+    flags: np.ndarray,
     ids: np.ndarray,
-    type_idx: list[np.ndarray],
-    seeds: list[tuple[int | None, int | None]],
+    starts: np.ndarray,
+    tail: tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray],
     step_us: int,
-    quant: list[str] | None = None,
     total_us: int | None = None,
-) -> tuple[np.ndarray, list[list[int]], list[tuple[int | None, int | None]]]:
-    """Chain-emitting variant of :func:`_relaxed_scan`: each level
-    forward-fills the qualifying POSITION (row index), then indexes the
-    int64 id array with it, and every hit reports the bound predecessor
-    id per level (the values visible at strictly earlier positions —
-    identical to the batch struct-max frame).  Timestamps round-trip
-    through float64 safely (µs-epochs < 2⁵³); ids never do — a float64
-    ffill of raw ids silently corrupts ids above 2⁵³, so only positions
-    (always < 2⁵³) are filled as floats.  An optional step's chain slot
-    is included only when its binding is in-window of the completion —
-    byte-identical to the batch form's ``concat_ws`` null-skip."""
-    nan = np.nan
-    n = len(type_idx)
-    ordf = ord_us.astype("float64")
-    pos = np.arange(len(ord_us), dtype="float64")
-    qual = type_idx[0]
-    new_seeds: list[tuple[int | None, int | None]] = []
-    prev_ids: list[np.ndarray] = []
-    prev_ts: list[np.ndarray] = []
-    hits = np.zeros(0, dtype="int64")
-    for i in range(1, n):
-        seed_ts, seed_id = seeds[i - 1]
-        f_pos = pd.Series(np.where(qual, pos, nan)).ffill().to_numpy()
-        has = ~np.isnan(f_pos)
-        safe = np.where(has, f_pos, 0).astype("int64")
-        f_ts = np.where(
-            has, ordf[safe], nan if seed_ts is None else float(seed_ts)
-        )
-        f_id = np.where(has, ids[safe], 0 if seed_id is None else seed_id)
-        new_seeds.append(
-            (
-                None if np.isnan(f_ts[-1]) else int(f_ts[-1]),
-                None if np.isnan(f_ts[-1]) else int(f_id[-1]),
-            )
-        )
-        p_ts = np.empty_like(f_ts)
-        p_ts[0] = nan if seed_ts is None else float(seed_ts)
-        p_ts[1:] = f_ts[:-1]
-        p_id = np.empty_like(f_id)
-        p_id[0] = 0 if seed_id is None else seed_id
-        p_id[1:] = f_id[:-1]
-        prev_ids.append(p_id)
-        prev_ts.append(p_ts)
-        with np.errstate(invalid="ignore"):
-            q = p_ts >= ordf - step_us
-            if quant is not None and quant[i - 1] == "optional":
-                q = q | (prev_ts[i - 2] >= ordf - step_us)
-            qual = type_idx[i] & q
-    with np.errstate(invalid="ignore"):
-        hits = np.flatnonzero(qual)
-        if total_us is not None and len(hits):
-            hits = hits[ord_us[hits] - prev_ts[0][hits] <= total_us]
-    chains = []
-    for h in hits:
-        parts = []
-        for m in range(n - 1):
-            if quant is not None and quant[m] == "optional":
-                v = prev_ts[m][h]
-                if np.isnan(v) or not (v >= ord_us[h] - step_us):
-                    continue
-            parts.append(int(prev_ids[m][h]))
-        chains.append(parts + [int(ids[h])])
-    return hits, chains, new_seeds
+) -> tuple[np.ndarray, list[list[int]], tuple[np.ndarray, ...]]:
+    """Segmented strict-contiguity scan: each key's carried last N-1
+    events (``tail`` = ``(ts, id, step-flag bitmask, present)``, shape
+    ``(N-1, keys)``, oldest slot first) are prepended inside the key's
+    own segment, then one lag battery checks the N-1 immediately
+    preceding events' step flags and pairwise gaps, masked at segment
+    boundaries.  ``flags`` is ``(rows, N)``.  Returns the completing
+    batch rows, their chains and the new tail."""
+    n = flags.shape[1]
+    t_o, t_i, t_f, t_has = tail
+    t_seg, slot = np.nonzero(t_has.T)  # key-major, oldest slot first
+    seg, _ = _segments(starts, len(ords))
+    order = np.argsort(np.concatenate([t_seg, seg]), kind="stable")
+    t_flags = ((t_f[slot, t_seg][:, None] >> np.arange(n)) & 1).astype(bool)
+    e_seg = np.concatenate([t_seg, seg])[order]
+    e_ord = np.concatenate([t_o[slot, t_seg], ords])[order]
+    e_ids = np.concatenate([t_i[slot, t_seg], ids])[order]
+    e_flags = np.concatenate([t_flags, flags])[order]
+    e_row = np.concatenate([np.full(len(slot), -1), np.arange(len(ords))])[order]
+    e_starts = np.flatnonzero(np.append(True, e_seg[1:] != e_seg[:-1]))
+    e_seg_start = e_starts[e_seg]
+    pos = np.arange(len(e_ord))
+    cond = e_flags[:, n - 1] & (e_row >= 0)  # completions in THIS batch
+    for m in range(1, n):
+        ok = pos - m >= e_seg_start
+        lag = np.where(ok, pos - m, 0)
+        nxt = np.where(ok, pos - m + 1, 0)
+        cond &= ok & e_flags[lag, n - 1 - m] & (e_ord[nxt] - e_ord[lag] <= step_us)
+    g = np.flatnonzero(cond)
+    if total_us is not None:
+        g = g[e_ord[g] - e_ord[g - (n - 1)] <= total_us]
+    chains = [[int(e_ids[x - m]) for m in range(n - 1, -1, -1)] for x in g]
+    # new tail: slot j holds the segment's (n-1-j)-th last row, if any
+    e_ends = np.append(e_starts[1:], len(e_ord)) - 1
+    r = e_ends - np.arange(n - 2, -1, -1)[:, None]
+    new_has = r >= e_starts
+    r = np.maximum(r, 0)
+    bits = (e_flags.astype("int64") << np.arange(n)).sum(axis=1)
+    return e_row[g], chains, (e_ord[r], e_ids[r], bits[r], new_has)
 
 
 def match_pattern_stream(
@@ -454,12 +471,24 @@ def match_pattern_stream(
     (plus their event ids in chain mode), ``strict`` the last N-1
     events — O(1) state either way, which is what lets the pattern run
     over millions of keys with state in the executor state store.  Step
-    predicates are projected to boolean columns JVM-side BEFORE the
+    predicates and the µs event time are projected JVM-side BEFORE the
     stateful scan, so the Python handler only reads pre-evaluated
-    bools.  Batch rows are sorted by (ts, rank, tiebreak) inside the
-    handler, so out-of-order arrival WITHIN a micro-batch is handled;
-    cross-batch order relies on the source's event-time alignment (same
-    contract as every handler in :mod:`..streaming.stateful`).
+    columns.
+
+    Greedy mode runs through
+    :func:`..streaming.stateful.bucketed_keyed_scan`: one pandas call
+    per hash bucket of the key (at most ``B`` = build-time
+    ``spark.sql.shuffle.partitions`` per micro-batch, so at most ``B``
+    stateful tasks do work), sorted by key then (ts, rank, tiebreak),
+    with one segmented numpy scan over all of the bucket's keys
+    (:func:`_relaxed_scan`, :func:`_strict_scan`).  Each key still sees
+    only its own rows and state.  That state sits in the bucket's
+    state row as typed per-key arrays; a touched bucket rewrites
+    O(keys per bucket) per batch, where a per-key
+    ``transformWithStateInPandas`` MapState would write only the
+    touched keys.  Out-of-order arrival WITHIN a micro-batch is sorted
+    out; cross-batch order relies on the source's event-time alignment
+    (same contract as every handler in :mod:`..streaming.stateful`).
 
     Quantifiers and ``within_total`` match the batch form.
 
@@ -467,7 +496,8 @@ def match_pattern_stream(
     the qualifying-event window in state — O(events per window), not
     O(1) like greedy — because when the earliest qualifier expires the
     binding falls to the NEXT earliest, which must have been retained.
-    The streaming form caps that state at ``reluctant_cap`` qualifiers
+    It keeps one handler call and one state row per key.  The streaming
+    form caps that state at ``reluctant_cap`` qualifiers
     per (key, level): qualifiers beyond the cap are dropped (keeping
     the EARLIEST ``reluctant_cap``, which preserves every binding the
     retained window can prove) and the emitted ``overflow`` flag turns
@@ -495,12 +525,6 @@ def match_pattern_stream(
         raise ValueError(f"unknown mode: {mode}")
     conds = _step_conditions(steps, conditions, type_col)
     n = len(conds)
-    if n < 2:
-        raise ValueError(
-            "match_pattern_stream needs at least 2 steps (a 1-step "
-            "pattern is just a filter); got "
-            f"{n}"
-        )
     quant = _normalize_quantifiers(quantifiers, n, contiguity)
     step_us = int(pd.Timedelta(within).total_seconds() * 1_000_000)
     total_us = (
@@ -513,33 +537,7 @@ def match_pattern_stream(
         ", match_chain string" if chain else ""
     )
     cols = [f"_c{i}" for i in range(n)]
-    prepared = _with_step_cols(df, conds)
-
-    # strict batch orders by (_ord, tiebreak) — no _rank — so the
-    # streaming twin must sort identically or same-instant ties diverge
-    # between the two forms (relaxed keeps the _rank key: earlier
-    # stages of a same-instant cascade update state before later
-    # stages test it)
-    sort_keys = (
-        ["_ord", tiebreak]
-        if contiguity == "strict"
-        else ["_ord", "_rank", tiebreak]
-    )
-
-    def _prep(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        pdf["_ord"] = pdf[ts].to_numpy().astype("datetime64[us]").astype("int64")
-        return pdf.sort_values(sort_keys, ignore_index=True)
-
-    def _emit(pdf, hits, chains=None):
-        out = {
-            key: [pdf[key].iloc[0] if len(pdf) else None] * len(hits),
-            tiebreak: pdf[tiebreak].to_numpy(dtype="int64")[hits],
-            "ts_ms": pdf["_ord"].to_numpy()[hits] // 1_000,
-        }
-        if chain:
-            out["match_chain"] = [">".join(str(i) for i in c) for c in chains]
-        return pd.DataFrame(out)
+    prepared = _with_step_cols(df.withColumn("_ord", F.unix_micros(ts)), conds)
 
     if mode == "reluctant":
         if contiguity != "relaxed":
@@ -571,9 +569,6 @@ def match_pattern_stream(
             state: GroupState,
         ) -> Iterator[pd.DataFrame]:
             pdf = pd.concat(list(pdfs), ignore_index=True)
-            pdf["_ord"] = (
-                pdf[ts].to_numpy().astype("datetime64[us]").astype("int64")
-            )
             pdf = pdf.sort_values(rel_sort, ignore_index=True)
             if state.exists:
                 raw, ov = state.get
@@ -668,112 +663,72 @@ def match_pattern_stream(
             GroupStateTimeout.NoTimeout,
         )
 
-    if contiguity == "relaxed":
+    def _emit(pdf, hits, chains):
+        if not len(hits):
+            return None
+        out = {
+            key: pdf[key].to_numpy()[hits],
+            tiebreak: pdf[tiebreak].to_numpy(dtype="int64")[hits],
+            "ts_ms": pdf["_ord"].to_numpy()[hits] // 1_000,
+        }
         if chain:
-            state_schema = ", ".join(
-                f"l{i} long, i{i} long" for i in range(n - 1)
-            )
-        else:
-            state_schema = ", ".join(f"l{i} long" for i in range(n - 1))
+            out["match_chain"] = [">".join(str(i) for i in c) for c in chains]
+        return pd.DataFrame(out)
 
-        def handle(
-            k: tuple[Any, ...],
-            pdfs: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            pdf = _prep(pdfs)
-            type_idx = [pdf[c].to_numpy(dtype=bool) for c in cols]
-            ords = pdf["_ord"].to_numpy()
+    # strict batch orders by (_ord, tiebreak) — no _rank — so the
+    # streaming twin must sort identically or same-instant ties diverge
+    # between the two forms (relaxed keeps the _rank key: earlier
+    # stages of a same-instant cascade update state before later
+    # stages test it)
+    if contiguity == "relaxed":
+        sort_keys = ["_ord", "_rank", tiebreak]
+        fields = [f"l{j}" for j in range(n - 1)]
+        if chain:
+            fields += [f"i{j}" for j in range(n - 1)]
+
+        def kernel(pdf, starts, vals, has):
+            hits, chains, (ts_, has, ids) = _relaxed_scan(
+                pdf["_ord"].to_numpy(),
+                [pdf[c].to_numpy(dtype=bool) for c in cols],
+                starts,
+                vals[: n - 1],
+                has[: n - 1],
+                step_us,
+                quant,
+                total_us,
+                pdf[tiebreak].to_numpy(dtype="int64") if chain else None,
+                vals[n - 1 :] if chain else None,
+            )
             if chain:
-                flat = list(state.get) if state.exists else [None] * (2 * (n - 1))
-                seeds = [
-                    (flat[2 * i], flat[2 * i + 1]) for i in range(n - 1)
-                ]
-                hits, chains, new_seeds = _relaxed_scan_chain(
-                    ords,
-                    pdf[tiebreak].to_numpy(dtype="int64"),
-                    type_idx,
-                    seeds,
-                    step_us,
-                    quant,
-                    total_us,
-                )
-                state.update(tuple(x for pair in new_seeds for x in pair))
-                if len(hits):
-                    yield _emit(pdf.assign(**{key: k[0]}), hits, chains)
-            else:
-                seeds = list(state.get) if state.exists else [None] * (n - 1)
-                hits, new_seeds = _relaxed_scan(
-                    ords, type_idx, seeds + [None], step_us, quant, total_us
-                )
-                state.update(tuple(new_seeds[: n - 1]))
-                if len(hits):
-                    yield _emit(pdf.assign(**{key: k[0]}), hits)
+                ts_, has = np.vstack([ts_, ids]), np.vstack([has, has])
+            return _emit(pdf, hits, chains), ts_, has
 
     elif contiguity == "strict":
-        state_schema = "tail string"
+        sort_keys = ["_ord", tiebreak]
+        # the carried last n-1 events, oldest slot first: ts, id and the
+        # step-predicate bitmask
+        fields = [f"{f}{j}" for f in ("o", "i", "f") for j in range(n - 1)]
 
-        def handle(
-            k: tuple[Any, ...],
-            pdfs: Iterator[pd.DataFrame],
-            state: GroupState,
-        ) -> Iterator[pd.DataFrame]:
-            tail = json.loads(state.get[0]) if state.exists else []
-            pdf = _prep(pdfs)
-            carry = len(tail)
-            # per-event step-predicate vector (n bools) + ord + id, with
-            # the carried last n-1 events prepended
-            flags = np.concatenate(
-                [
-                    np.array([t[0] for t in tail], dtype=bool).reshape(-1, n)
-                    if carry
-                    else np.zeros((0, n), dtype=bool),
-                    np.column_stack([pdf[c].to_numpy(dtype=bool) for c in cols]),
-                ]
+        def kernel(pdf, starts, vals, has):
+            hits, chains, (*vals, has) = _strict_scan(
+                pdf["_ord"].to_numpy(),
+                pdf[cols].to_numpy(dtype=bool),
+                pdf[tiebreak].to_numpy(dtype="int64"),
+                starts,
+                (*np.split(vals, 3), has[: n - 1]),
+                step_us,
+                total_us,
             )
-            ords = np.concatenate(
-                [
-                    np.array([t[1] for t in tail], dtype="int64"),
-                    pdf["_ord"].to_numpy(),
-                ]
-            )
-            ids = np.concatenate(
-                [
-                    np.array([t[2] for t in tail], dtype="int64"),
-                    pdf[tiebreak].to_numpy(dtype="int64"),
-                ]
-            )
-            total = len(ords)
-            cond = flags[:, n - 1].copy()
-            for m in range(1, n):
-                lag_f = np.roll(flags[:, n - 1 - m], m)
-                lag_o = np.roll(ords, m)
-                prev_o = np.roll(ords, m - 1) if m > 1 else ords
-                ok = np.zeros(total, dtype=bool)
-                ok[m:] = lag_f[m:] & (prev_o[m:] - lag_o[m:] <= step_us)
-                cond = cond & ok
-            g_hits = np.flatnonzero(cond)
-            g_hits = g_hits[g_hits >= carry]  # completions in THIS batch
-            if total_us is not None and len(g_hits):
-                g_hits = g_hits[
-                    ords[g_hits] - ords[g_hits - (n - 1)] <= total_us
-                ]
-            hits = g_hits - carry
-            chains = [
-                [int(ids[g - m]) for m in range(n - 1, -1, -1)]
-                for g in g_hits
-            ]
-            keep = [
-                ([bool(b) for b in flags[i]], int(ords[i]), int(ids[i]))
-                for i in range(max(0, total - (n - 1)), total)
-            ]
-            state.update((json.dumps(keep),))
-            if len(hits):
-                yield _emit(pdf.assign(**{key: k[0]}), hits, chains)
+            return _emit(pdf, hits, chains), np.vstack(vals), np.vstack([has] * 3)
 
     else:
         raise ValueError(f"unknown contiguity: {contiguity}")
 
-    return prepared.groupBy(key).applyInPandasWithState(
-        handle, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return bucketed_keyed_scan(
+        prepared.select(key, tiebreak, "_ord", "_rank", *cols),
+        key,
+        sort_keys,
+        fields,
+        kernel,
+        out_schema,
     )

@@ -130,7 +130,13 @@ def streaming_cep_relaxed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``Trigger.AvailableNow`` into a memory sink, and hash-match the
     emitted matches against the chained-window batch SQL.  Proves the
     O(1)-state streaming scan emits bit-identical matches to the batch
-    plan on driver data, not just on test fixtures."""
+    plan on the scale-factor tables, not just on test fixtures.  The
+    scan runs once per hash bucket of ``user_id``
+    (``spark.sql.shuffle.partitions`` buckets), so a micro-batch makes
+    that many pandas calls and keeps that many state rows, not one per
+    user: on 40k events over 600 users with 4 partitions, 600 state
+    rows became 4 and the query's executor time fell from 11.1 to 2.2 s
+    (4-vCPU VM)."""
     from ..streaming import events_stream, run_available_now
     from .registry import scratch_dir
 

@@ -11,6 +11,10 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Bound on one run_available_now drain: far above any registry twin (a
+# few seconds at sf0.1), so only a hung query reaches it.
+AVAILABLE_NOW_TIMEOUT_S = 3600.0
+
 
 def run_available_now(
     sdf: DataFrame,
@@ -24,7 +28,8 @@ def run_available_now(
     The memory sink is the engine's test oracle boundary: what it holds
     after termination is exactly the stream's emitted output, so
     ``run_available_now(streaming_twin) == batch_query`` is the
-    equivalence contract.
+    equivalence contract.  A query still running after
+    ``AVAILABLE_NOW_TIMEOUT_S`` is stopped and raises ``TimeoutError``.
     """
     name = f"mem_{uuid.uuid4().hex[:12]}"
     q = (
@@ -35,7 +40,12 @@ def run_available_now(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    if not q.awaitTermination(AVAILABLE_NOW_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"streaming query {name} did not finish within "
+            f"{AVAILABLE_NOW_TIMEOUT_S} s"
+        )
     return sdf.sparkSession.table(name)
 
 

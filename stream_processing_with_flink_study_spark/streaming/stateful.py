@@ -9,6 +9,9 @@ Python), sort by event time *inside* the handler (intra-batch order is
 not guaranteed), and keep O(1) state per key — the properties that let
 the same code run over millions of keys on a cluster where per-key state
 lives in the executor state store, not on the driver.
+:func:`bucketed_keyed_scan` makes one call per hash bucket of keys
+instead of one per key (the greedy CEP twins and :func:`funnel_matches`
+run on it); the other operators here still make one call per key.
 
 Flink mapping: ValueState pattern ``정리/5주차.md:24-59``; state
 primitives ``정리/5주차.md:7-13``; TTL ``정리/5주차.md:142-148`` →
@@ -18,12 +21,13 @@ primitives ``정리/5주차.md:7-13``; TTL ``정리/5주차.md:142-148`` →
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 
@@ -77,38 +81,107 @@ def _count_window_core(
     return wins, buf_sum, buf_n, next_idx
 
 
-def _funnel_core(
-    ord_us: np.ndarray,
-    stage: np.ndarray,
-    last_s1: int | None,
-    last_s2: int | None,
-    step_us: int,
-) -> tuple[np.ndarray, int | None, int | None]:
-    """Vectorized funnel scan over one key's (ts, rank)-sorted batch.
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
-    The sequential recurrence decomposes into two forward-fills: the
-    latest stage-1 time visible at each row, then — because a stage-2
-    row qualifies purely from the s1 fill at its own position — the
-    latest QUALIFIED stage-2 time.  Stage-3 rows then test the s2 fill
-    locally.  Same-instant cascades keep working because rows arrive
-    sorted by (ts, stage rank): an earlier stage at the same timestamp
-    occupies an earlier position, and ffill looks strictly backwards in
-    position order, matching the loop's update-before-test behavior."""
-    nan = np.nan
-    s1_seed = nan if last_s1 is None else float(last_s1)
-    s2_seed = nan if last_s2 is None else float(last_s2)
-    ordf = ord_us.astype("float64")
 
-    s1_at = pd.Series(np.where(stage == 0, ordf, nan)).ffill().fillna(s1_seed).to_numpy()
-    with np.errstate(invalid="ignore"):
-        s2_qual = (stage == 1) & (s1_at >= ordf - step_us)
-    s2_at = pd.Series(np.where(s2_qual, ordf, nan)).ffill().fillna(s2_seed).to_numpy()
-    with np.errstate(invalid="ignore"):
-        hits = np.flatnonzero((stage == 2) & (s2_at >= ordf - step_us))
+def bucketed_keyed_scan(
+    df: DataFrame,
+    key: str,
+    sort_cols: list[str],
+    fields: list[str],
+    kernel: Callable[
+        [pd.DataFrame, np.ndarray, np.ndarray, np.ndarray],
+        tuple[pd.DataFrame | None, np.ndarray, np.ndarray],
+    ],
+    out_schema: str,
+) -> DataFrame:
+    """Run a keyed stateful scan once per hash bucket of ``key``, not
+    once per key.
 
-    new_s1 = None if np.isnan(s1_at[-1]) else int(s1_at[-1])
-    new_s2 = None if np.isnan(s2_at[-1]) else int(s2_at[-1])
-    return hits, new_s1, new_s2
+    Rows group by ``pmod(xxhash64(key), B)`` with ``B`` the session's
+    ``spark.sql.shuffle.partitions`` at build time — the count Spark
+    pins in the checkpoint — so a micro-batch makes at most ``B``
+    pandas calls whatever the key count.  Each call sorts its bucket's
+    rows by ``(key, *sort_cols)`` and calls ``kernel(pdf, starts, vals,
+    has)`` with the sorted rows, the first row of each key segment, and
+    the segments' carried state as int64 ``vals`` and bool ``has``
+    arrays of shape ``(len(fields), keys)`` (``has`` False: no value).
+    The kernel returns its output frame (or None) and the new ``vals``
+    and ``has`` in the same shape.
+
+    The per-key contract of ``mapGroupsWithState`` holds: a key sees
+    only its own rows and state.  The bucket's state row stores the
+    real key values, one nullable ``array<long>`` per field, and ``B``;
+    keys present in the batch are rewritten, every other key's state is
+    kept.  A touched bucket therefore rewrites O(keys per bucket) per
+    batch.  State written under a different ``B`` raises: its keys
+    would sit in the wrong buckets and silently lose their state."""
+    buckets = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    key_type = df.schema[key].dataType.simpleString()
+    state_schema = ", ".join(
+        [f"keys array<{key_type}>"]
+        + [f"{f} array<long>" for f in fields]
+        + ["buckets int"]
+    )
+    order = [key, *sort_cols]
+
+    def handle(
+        k: tuple[Any, ...],
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
+            order, ignore_index=True
+        )
+        if key_type in _INTEGRAL and pdf[key].dtype.kind == "f":
+            # Arrow hands an integral key holding nulls over as float64
+            pdf[key] = pdf[key].astype("Int64")
+        codes = pd.factorize(pdf[key], use_na_sentinel=False)[0]  # null: a key
+        starts = np.flatnonzero(np.append(True, codes[1:] != codes[:-1]))
+        seg_keys = pdf[key].iloc[starts].astype(object)
+        seg_keys = pd.Index(seg_keys.where(seg_keys.notna(), None), dtype=object)
+        if state.exists:
+            stored_keys, *stored, stored_buckets = state.get
+            if stored_buckets != buckets:
+                raise RuntimeError(
+                    f"key bucket {k[0]} holds state hashed into "
+                    f"{stored_buckets} buckets, but this query hashes keys "
+                    f"into {buckets} (spark.sql.shuffle.partitions at "
+                    "build time); rebuild with the checkpoint's "
+                    "partition count or start a new checkpoint"
+                )
+        else:
+            stored_keys, stored = [], [[] for _ in fields]
+        # a trailing all-None column is what keys new to state (-1) read
+        held = np.empty((len(fields), len(stored_keys) + 1), dtype=object)
+        held[:, :-1] = stored
+        at = pd.Index(stored_keys, dtype=object).get_indexer(seg_keys)
+        mine = held[:, at]
+        known = mine != None  # noqa: E711 (elementwise on objects)
+        out, vals, has = kernel(
+            pdf, starts, np.where(known, mine, 0).astype("int64"), known
+        )
+        # the batch's keys overwrite their column, new keys take the None
+        # column's place and beyond: every absent key's state is kept
+        new = at < 0
+        at[new] = len(stored_keys) + np.arange(new.sum())
+        held = np.concatenate(
+            [held[:, :-1], np.empty((len(fields), new.sum()), dtype=object)], axis=1
+        )
+        held[:, at] = np.where(has, vals, None)
+        state.update(
+            (list(stored_keys) + seg_keys[new].tolist(), *held.tolist(), buckets)
+        )
+        if out is not None and len(out):
+            yield out
+
+    return (
+        df.withColumn("_bucket", F.pmod(F.xxhash64(key), F.lit(buckets)))
+        .groupBy("_bucket")
+        .applyInPandasWithState(
+            handle, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+        )
+    )
 
 
 def temp_delta_alerts(
@@ -288,49 +361,15 @@ def funnel_matches(
     """Streaming CEP funnel (P1 ProcessFunction pattern): emit the final
     step of a ``steps`` sequence whose consecutive stages each occur
     within ``step_us`` — the stateful twin of the batch
-    ``funnel_conversions`` chained-window query.
+    ``funnel_conversions`` chained-window query.  It is the 3-step
+    relaxed pattern of :func:`..operators.cep.match_pattern_stream`
+    (same ``(ts, stage rank, event_id)`` order, so same-instant
+    cascades update state before later stages test it), with two
+    timestamps of state per key."""
+    from ..operators.cep import match_pattern_stream
 
-    Per-key state is just two timestamps (latest stage-1, latest
-    QUALIFIED stage-2) — O(1) per key regardless of history length,
-    the reason the pattern streams at 100 TB while the naive join
-    buffers windows of raw events.  Same-instant cascades (view, click,
-    purchase sharing one timestamp) match the batch RANGE-frame
-    semantics because rows sort by (ts, stage rank): earlier stages
-    update state before later stages test it."""
-    s1, s2, s3 = steps
-    out_schema = f"{key} long, event_id long, ts_ms long"
-    state_schema = "last_s1_us long, last_s2_us long"
-
-    def handle(
-        k: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        last_s1, last_s2 = state.get if state.exists else (None, None)
-        pdf = pd.concat(list(pdfs), ignore_index=True)
-        rank = {s1: 0, s2: 1, s3: 2}
-        pdf["_rank"] = pdf[type_col].map(rank)
-        pdf = pdf.dropna(subset=["_rank"]).sort_values([ts, "_rank", "event_id"])
-        if not len(pdf):
-            state.update((last_s1, last_s2))
-            return
-        ord_us = pdf[ts].to_numpy().astype("datetime64[us]").astype("int64")
-        stage = pdf["_rank"].to_numpy(dtype="int64")
-        hits, last_s1, last_s2 = _funnel_core(
-            ord_us, stage, last_s1, last_s2, step_us
-        )
-        state.update((last_s1, last_s2))
-        if len(hits):
-            yield pd.DataFrame(
-                {
-                    key: [k[0]] * len(hits),
-                    "event_id": pdf["event_id"].to_numpy(dtype="int64")[hits],
-                    "ts_ms": ord_us[hits] // 1_000,
-                }
-            )
-
-    return df.groupBy(key).applyInPandasWithState(
-        handle, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    return match_pattern_stream(
+        df, key, ts, steps, within=f"{step_us}us", type_col=type_col
     )
 
 
@@ -504,7 +543,6 @@ def simhash_near_dup_stream(
     every key regardless of stream length.
     """
     bits = 32 // bands
-    from pyspark.sql import functions as F
 
     banded = df.select(
         F.col(id_col).alias("_id"),

@@ -122,6 +122,30 @@ def test_strict_stream_match_spans_batch_boundary(spark, tmp_path):
 
 
 @pytest.mark.parametrize("contiguity", ["relaxed", "strict"])
+def test_stream_null_key_is_one_key(spark, tmp_path, contiguity):
+    """Null keys form one key, as in the batch form's partitionBy: its
+    rows share one segment and its state crosses the batch boundary."""
+    t = lambda s: datetime(2024, 1, 1, 0, 0, s, tzinfo=timezone.utc)
+    df = _mk(spark, [
+        (None, 1, t(0), "a"), (None, 2, t(1), "b"),
+        (1, 3, t(0), "a"), (1, 4, t(2), "b"), (None, 5, t(3), "b"),
+    ])
+    kw = dict(within="10 seconds", contiguity=contiguity)
+    sdf = S.memory_batches_stream(
+        spark, [df.filter("event_id <= 2"), df.filter("event_id > 2")],
+        str(tmp_path / "src"),
+    )
+    got = S.run_available_now(
+        match_pattern_stream(sdf, "user_id", "ts", ("a", "b"), **kw),
+        str(tmp_path / "ck"),
+        "append",
+    )
+    want = match_pattern(df, "user_id", "ts", ("a", "b"), **kw)
+    assert want.filter("user_id IS NULL").count() > 0
+    pd.testing.assert_frame_equal(_sorted(got), _sorted(want), check_dtype=False)
+
+
+@pytest.mark.parametrize("contiguity", ["relaxed", "strict"])
 def test_plan_has_single_exchange(spark, events, contiguity):
     """Pattern length widens the projection, never the shuffle topology:
     N-1 chained windows (or one lag battery) share one sort."""

@@ -427,6 +427,76 @@ def test_funnel_matches_equivalence(spark, events, two_batch_stream, tmp_path):
     assert_df_equal(got, want)
 
 
+def _funnel_rows(spark, rows):
+    return spark.createDataFrame(
+        rows, "user_id long, event_id long, ts timestamp, event_type string"
+    )
+
+
+def test_bucketed_state_keeps_keys_absent_from_a_batch(spark, tmp_path):
+    """One key bucket, so every key shares one state row: user 1's view
+    in batch 0 must survive batch 1, which carries only other users,
+    and complete with the click and purchase of batch 2."""
+    from datetime import datetime, timezone
+
+    t = lambda h: datetime(2024, 1, 1, h, tzinfo=timezone.utc)
+    batches = [
+        _funnel_rows(spark, [(1, 10, t(0), "view"), (2, 20, t(0), "view")]),
+        _funnel_rows(spark, [(2, 21, t(1), "click"), (3, 30, t(1), "view")]),
+        _funnel_rows(spark, [(1, 11, t(2), "click"), (1, 12, t(3), "purchase")]),
+    ]
+    with conf_override(spark, {"spark.sql.shuffle.partitions": "1"}):
+        sdf = S.memory_batches_stream(spark, batches, str(tmp_path / "src"))
+        got = _sorted_pdf(
+            S.run_available_now(
+                S.funnel_matches(sdf), str(tmp_path / "ck"), "append"
+            )
+        )
+    assert list(got["user_id"]) == [1] and list(got["event_id"]) == [12]
+
+
+def test_bucketed_state_refuses_a_changed_bucket_count(spark, tmp_path):
+    """Keys hash into as many buckets as the build-time shuffle
+    partitions.  Rebuilding the twin with another count on the same
+    checkpoint must fail loudly, not lose every moved key's state."""
+    from datetime import datetime, timezone
+
+    t = lambda h: datetime(2024, 1, 1, h, tzinfo=timezone.utc)
+    src = tmp_path / "src"
+
+    def drain(sdf):
+        # the memory sink cannot restart from a checkpoint; noop can
+        q = (
+            S.funnel_matches(sdf).writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ck"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(600)
+
+    b0 = _funnel_rows(spark, [(u, u, t(0), "view") for u in range(16)])
+    with conf_override(spark, {"spark.sql.shuffle.partitions": "4"}):
+        drain(S.memory_batches_stream(spark, [b0], str(src)))
+    b1 = _funnel_rows(spark, [(u, 100 + u, t(1), "click") for u in range(16)])
+    b1.repartition(1).write.parquet(str(src / "b00001"))
+    with conf_override(spark, {"spark.sql.shuffle.partitions": "2"}):
+        with pytest.raises(Exception, match="hashed into 4 buckets"):
+            drain(S.file_stream(spark, f"{src}/b*", schema=b0.schema))
+    assert spark.streams.active == []
+
+
+def test_run_available_now_times_out_and_stops(spark, events, tmp_path, monkeypatch):
+    """No infinite wait: past the module bound the query is stopped and
+    the caller gets a TimeoutError naming it."""
+    from stream_processing_with_flink_study_spark.streaming import pipelines
+
+    monkeypatch.setattr(pipelines, "AVAILABLE_NOW_TIMEOUT_S", 0.001)
+    sdf = S.memory_batches_stream(spark, [events.limit(10)], str(tmp_path / "src"))
+    with pytest.raises(TimeoutError, match="streaming query mem_"):
+        S.run_available_now(sdf, str(tmp_path / "ck"), "append")
+    assert spark.streams.active == []
+
+
 def test_interval_join_stream_left_outer_emits_nulls(spark, events, tmp_path):
     """Left-outer stream-stream join: unmatched purchases must surface
     with null error columns ONCE the watermark passes their match
@@ -717,10 +787,12 @@ def test_vectorized_handler_cores_match_naive_loops():
 
     import numpy as np
 
+    from stream_processing_with_flink_study_spark.operators.cep import (
+        _relaxed_scan,
+    )
     from stream_processing_with_flink_study_spark.streaming.stateful import (
         _count_window_core,
         _delta_alerts_core,
-        _funnel_core,
     )
 
     rng = np.random.default_rng(7)
@@ -762,18 +834,11 @@ def test_vectorized_handler_cores_match_naive_loops():
     assert [(i, round(w, 4)) for i, w in wins] == [(i, round(w, 4)) for i, w in want]
     assert bn == c and ni == idx and abs(bs - s) < 1e-6
 
-    # --- funnel ---
-    ord_us = np.sort(rng.integers(0, 10**9, n_rows))
-    stage = rng.integers(0, 3, n_rows)
-    step = 10**7
-    for seed1, seed2 in ((None, None), (int(ord_us[0]) - 5 * 10**6, None)):
-        t0 = time.perf_counter()
-        hits, ns1, ns2 = _funnel_core(ord_us, stage, seed1, seed2, step)
-        t_vec = time.perf_counter() - t0
+    # --- funnel: the segmented relaxed kernel behind funnel_matches ---
+    def funnel_loop(ord_us, stage, l1, l2, step):
         # baseline: the iterrows formulation the handler used to run
         pdf = pd.DataFrame({"ord_us": ord_us, "stage": stage})
-        t0 = time.perf_counter()
-        want, l1, l2 = [], seed1, seed2
+        want = []
         for i, r in pdf.iterrows():
             o, st = int(r["ord_us"]), int(r["stage"])
             if st == 0:
@@ -781,13 +846,62 @@ def test_vectorized_handler_cores_match_naive_loops():
             elif st == 1:
                 if l1 is not None and l1 >= o - step:
                     l2 = o
-            elif l2 is not None and l2 >= o - step:
+            elif st == 2 and l2 is not None and l2 >= o - step:
                 want.append(i)
+        return want, l1, l2
+
+    def funnel_scan(ord_us, stage, starts, seeds, step):
+        seed_has = np.array([[s is not None for s in lv] for lv in seeds])
+        seed_ts = np.array([[s or 0 for s in lv] for lv in seeds], dtype="int64")
+        hits, _, (ts_, has, _) = _relaxed_scan(
+            ord_us, [stage == s for s in range(3)], starts, seed_ts, seed_has, step
+        )
+        state = [
+            tuple(int(ts_[lv, k]) if has[lv, k] else None for lv in range(2))
+            for k in range(len(starts))
+        ]
+        return hits, state
+
+    ord_us = np.sort(rng.integers(0, 10**9, n_rows))
+    stage = rng.integers(0, 3, n_rows)
+    step = 10**7
+    for seed1, seed2 in ((None, None), (int(ord_us[0]) - 5 * 10**6, None)):
+        t0 = time.perf_counter()
+        hits, [(ns1, ns2)] = funnel_scan(
+            ord_us, stage, np.array([0]), [[seed1], [seed2]], step
+        )
+        t_vec = time.perf_counter() - t0
+        t0 = time.perf_counter()
+        want, l1, l2 = funnel_loop(ord_us, stage, seed1, seed2, step)
         t_loop = time.perf_counter() - t0
         assert list(hits) == want
         assert ns1 == l1 and ns2 == l2
         if t_loop / t_vec < 3:
             print(f"note: funnel speedup only {t_loop/t_vec:.1f}x")
+
+    # multi-key bucket: random segment boundaries, per-key seeds, and a
+    # last key with no qualifying row (only other event types) whose
+    # state must come back as its seeds
+    starts = np.append(0, np.sort(rng.choice(np.arange(1, n_rows), 11, replace=False)))
+    ends = np.append(starts[1:], n_rows)
+    ord_us = np.concatenate(
+        [np.sort(rng.integers(0, 10**9, e - s)) for s, e in zip(starts, ends)]
+    )
+    stage = rng.integers(0, 3, n_rows)
+    stage[starts[-1]:] = 3
+    seeds = [
+        [int(v) if rng.random() < 0.5 else None for v in rng.integers(0, 10**9, 12)]
+        for _ in range(2)
+    ]
+    hits, state = funnel_scan(ord_us, stage, starts, seeds, step)
+    want, want_state = [], []
+    for k, (s, e) in enumerate(zip(starts, ends)):
+        w, l1, l2 = funnel_loop(ord_us[s:e], stage[s:e], seeds[0][k], seeds[1][k], step)
+        want += [s + i for i in w]
+        want_state.append((l1, l2))
+    assert list(hits) == want
+    assert state == want_state
+    assert state[-1] == (seeds[0][-1], seeds[1][-1])
 
 
 def test_idle_stream_side_holds_then_releases_watermark(spark, tmp_path):
