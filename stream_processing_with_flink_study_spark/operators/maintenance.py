@@ -16,6 +16,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.batch import read_parquet
+
 
 def compact_parquet(
     spark: SparkSession,
@@ -39,7 +41,7 @@ def compact_parquet(
     total_bytes = fs.getContentSummary(path).getLength()
     n_files = max(1, math.ceil(total_bytes / target_file_bytes))
     (
-        spark.read.parquet(src_dir)
+        read_parquet(spark, src_dir)
         .repartition(n_files)
         .write.mode("overwrite")
         .parquet(dst_dir)
@@ -72,7 +74,7 @@ def read_pruned(
 ) -> DataFrame:
     """Read a date-partitioned table with a partition-pruning predicate
     (``dt`` comparisons bind to directory names, not data)."""
-    return spark.read.parquet(src_dir).filter(
+    return read_parquet(spark, src_dir).filter(
         (F.col("dt") >= start_dt) & (F.col("dt") <= end_dt)
     )
 

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load_table
+from ..sources.snapshots import _edge_snapshot
 from .queries_graph import _copurchase_edges, _cosupplier_edges
 from .registry import query
 
@@ -85,33 +86,13 @@ def _bfs_prefix(k: int = BFS_SEEDS, rounds: int = BFS_ROUNDS) -> str:
     return _BFS_PREFIX_SQL.format(k=k) + "," + _bfs_rounds_sql(rounds)
 
 
-_SYM_ARRAYS: dict[tuple, tuple | None] = {}
-
-
-def _copurchase_sym_arrays(spark: SparkSession, sf_dir: str):
-    """The BFS gate's verdict on the co-purchase sym edges
-    (:func:`_local_sym_arrays`), decided ONCE per process and
-    fingerprint-keyed exactly like the parquet edge snapshots
-    (``queries_graph._edge_snapshot``): the BFS build and the Brandes
-    pass both take it, so neither re-counts nor re-collects (2.4M rows
-    were ~2 s per consumer at bench scale).  The above-gate verdict
-    (None) is cached too.  Plain numpy arrays — invisible to
-    ``clearCache``/the bench drain, rebuilt on data-fingerprint change,
-    never cross-run."""
-    import os as _os
-
-    from .queries_graph import _dataset_fingerprint
-
-    key = (_os.path.abspath(sf_dir), _dataset_fingerprint(sf_dir))
-    if key not in _SYM_ARRAYS:
-        _SYM_ARRAYS[key] = _local_sym_arrays(_copurchase_edges(spark, sf_dir))
-    return _SYM_ARRAYS[key]
-
-
 def _local_sym_arrays(sym: DataFrame):
     """(src, dst) int64 numpy arrays of ``sym`` if it fits
     :data:`BFS_LOCAL_EDGE_GATE` (read now) and holds no nulls, else
-    None — the distributed loops never collect."""
+    None — the distributed loops never collect.  Over the co-purchase
+    snapshot the verdict is taken once per process and gate value
+    (``_collect_under_gate`` memoizes it), so the BFS build and the
+    Brandes pass neither re-count nor re-collect."""
     import numpy as np
 
     from ..operators.graph import _collect_under_gate
@@ -125,11 +106,6 @@ def _local_sym_arrays(sym: DataFrame):
     )
 
 
-# ``sym_arrays`` default of the BFS/Brandes entry points: decide the gate
-# from ``sym`` itself (a caller holding a cached verdict passes it)
-_DECIDE = object()
-
-
 def _bfs_sigma(
     spark: SparkSession, sf_dir: str, rounds: int = BFS_ROUNDS
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -139,11 +115,10 @@ def _bfs_sigma(
     data consumed identically by three queries (closeness,
     eccentricity, betweenness), so like the edge lists it is
     materialized once per process via the fingerprinted
-    :func:`..queries_graph._edge_snapshot` mechanism — each consumer
-    pays one parquet read instead of re-running the ``rounds``-deep
-    sequential BFS (3 checkpointed join+anti-join rounds)."""
-    from .queries_graph import _edge_snapshot
-
+    :func:`..sources.snapshots._edge_snapshot` mechanism — each
+    consumer pays one parquet read instead of re-running the
+    ``rounds``-deep sequential BFS (3 checkpointed join+anti-join
+    rounds)."""
     # the co-purchase snapshot is itself a parquet scratch file — cheap
     # to re-scan per reference, no checkpoint job needed here (below
     # the local gate the build is one Arrow collect; the distributed
@@ -153,11 +128,7 @@ def _bfs_sigma(
         spark,
         sf_dir,
         f"bfs_sigma_r{rounds}",
-        lambda sp, sd: bfs_sigma_from(
-            _copurchase_edges(sp, sd),
-            rounds=rounds,
-            sym_arrays=_copurchase_sym_arrays(sp, sd),
-        )[2],
+        lambda sp, sd: bfs_sigma_from(_copurchase_edges(sp, sd), rounds=rounds)[2],
     )
     seeds = b.filter(F.col("dist") == 0).select(
         F.col("node").alias("seed")
@@ -220,7 +191,6 @@ def bfs_sigma_from(
     rounds: int = BFS_ROUNDS,
     n_seeds: int = BFS_SEEDS,
     seeds: DataFrame | None = None,
-    sym_arrays=_DECIDE,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(sym, seeds, levels) where levels = (seed, node, dist, sigma)
     for every node reached within ``rounds`` hops of the ``n_seeds``
@@ -234,17 +204,13 @@ def bfs_sigma_from(
     call time; 0 forces the distributed path) run the driver-side
     scatter-add form (:func:`_bfs_sigma_local`, identical exact-int
     labels); larger graphs — the 100 TB regime, and the 10x overflow
-    sweep — keep the distributed join-per-round loop.  ``sym_arrays``
-    is a verdict already taken on ``sym`` (the per-process
-    :func:`_copurchase_sym_arrays` cache): (src, dst) arrays, or None
-    for the distributed loop; omitted, the gate decides here."""
-    if sym_arrays is _DECIDE:
-        sym_arrays = _local_sym_arrays(sym)
-    if sym_arrays is not None:
+    sweep — keep the distributed join-per-round loop."""
+    arrays = _local_sym_arrays(sym)
+    if arrays is not None:
         import numpy as np
 
         spark = sym.sparkSession
-        e_src, e_dst = sym_arrays
+        e_src, e_dst = arrays
         if seeds is None:
             # smallest-id seeds straight off the collected array — no
             # distinct+sort+limit Spark job (~1 s at bench scale)
@@ -447,9 +413,7 @@ def betweenness_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the planted-path test in tests/test_graphdist.py).
     Top 20 interior parts by accumulated dependency."""
     sym, seeds, b = _bfs_sigma(spark, sf_dir)
-    return brandes_fixed_point_from(
-        sym, b, sym_arrays=_copurchase_sym_arrays(spark, sf_dir)
-    ).limit(20)
+    return brandes_fixed_point_from(sym, b).limit(20)
 
 
 def _brandes_local(b: DataFrame, e_src, e_dst) -> DataFrame:
@@ -463,8 +427,11 @@ def _brandes_local(b: DataFrame, e_src, e_dst) -> DataFrame:
     import numpy as np
     import pandas as pd
 
+    from ..operators.graph import _collect_under_gate
+
     spark = b.sparkSession
-    pdf_b = b.select("seed", "node", "dist", "sigma").toPandas()
+    # ungated: the levels are bounded by the gated edge arrays
+    pdf_b = _collect_under_gate(b.select("seed", "node", "dist", "sigma"), None)
     schema = "node long, dint long"
     if not len(pdf_b):
         return spark.createDataFrame([], schema)
@@ -505,21 +472,17 @@ def _brandes_local(b: DataFrame, e_src, e_dst) -> DataFrame:
     return spark.createDataFrame(allp, schema)
 
 
-def brandes_fixed_point_from(
-    sym: DataFrame, b: DataFrame, sym_arrays=_DECIDE
-) -> DataFrame:
+def brandes_fixed_point_from(sym: DataFrame, b: DataFrame) -> DataFrame:
     """Backward dependency accumulation in micro-unit integers over the
     (seed, node, dist, sigma) BFS levels; returns every scored node
-    ordered by (bet_int desc, part_id).  Same hybrid gate and
-    ``sym_arrays`` verdict as :func:`bfs_sigma_from`: at or under
-    :data:`BFS_LOCAL_EDGE_GATE` sym rows the two level-joins run as
-    driver-side scatter-adds (:func:`_brandes_local`); above it — 100
-    TB, 10x overflow sweep — the distributed join+checkpoint rounds are
-    unchanged."""
-    if sym_arrays is _DECIDE:
-        sym_arrays = _local_sym_arrays(sym)
-    if sym_arrays is not None:
-        allints = _brandes_local(b, *sym_arrays)
+    ordered by (bet_int desc, part_id).  Same hybrid gate as
+    :func:`bfs_sigma_from`: at or under :data:`BFS_LOCAL_EDGE_GATE` sym
+    rows the two level-joins run as driver-side scatter-adds
+    (:func:`_brandes_local`); above it — 100 TB, 10x overflow sweep —
+    the distributed join+checkpoint rounds are unchanged."""
+    arrays = _local_sym_arrays(sym)
+    if arrays is not None:
+        allints = _brandes_local(b, *arrays)
     else:
         allints = _brandes_distributed(sym, b)
     return (

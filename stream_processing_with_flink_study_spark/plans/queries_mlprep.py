@@ -3497,6 +3497,40 @@ def _sh_oracle() -> str:
     """
 
 
+def _halving_exits(
+    by_rung: dict[int, list[tuple[int, int, int]]], n_rungs: int
+) -> list[tuple[int, int, int, int, int]]:
+    """The survivor cascade over (nation, n_orders, cents) cells per
+    rung: (nation, exit rung, rank at exit, n_orders, cents) rows.
+    Each rung ranks by (cents/n_orders desc, nation asc) and keeps the
+    top half (ceil) for the next rung."""
+    exits: list[tuple[int, int, int, int, int]] = []
+    survivors: set[int] | None = None
+    last = n_rungs - 1
+    for r in range(n_rungs):
+        cur = by_rung.get(r, [])
+        if survivors is not None:
+            cur = [t for t in cur if t[0] in survivors]
+        # the metric is Spark's long / long: both operands rounded to
+        # double first (Python's int / int rounds the exact quotient,
+        # and the two differ above 2**53)
+        ranked = sorted(cur, key=lambda t: (-(float(t[2]) / float(t[1])), t[0]))
+        half = (len(ranked) + 1) // 2
+        if r < last:
+            survivors = {t[0] for t in ranked[:half]}
+            exits.extend(
+                (t[0], r, i + 1, t[1], t[2])
+                for i, t in enumerate(ranked)
+                if i + 1 > half
+            )
+        else:
+            exits.extend(
+                (t[0], r, i + 1, t[1], t[2])
+                for i, t in enumerate(ranked)
+            )
+    return exits
+
+
 @query("successive_halving_schedule", _sh_oracle())
 def successive_halving_schedule(
     spark: SparkSession, sf_dir: str
@@ -3518,9 +3552,9 @@ def successive_halving_schedule(
     markov alphabet-bounded-state pattern: nation keys are a ≤25-value
     alphabet, so the cascade state is ~100 exact-int rows at ANY corpus
     size — never worth 4 sequential Spark window stages).  Metrics are
-    one double division of exact int64 cents/counts (long→double is
-    correctly rounded in BOTH engines, so the Python sort cannot fork
-    from the SQL rank), rank ties break by nation."""
+    Spark's long / long over exact int64 cents/counts (both rounded to
+    double, then divided); the oracle's DECIMAL-then-double form agrees
+    with it while cents stay below 2**53.  Rank ties break by nation."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
@@ -3555,29 +3589,7 @@ def successive_halving_schedule(
         by_rung.setdefault(row["rung"], []).append(
             (row["nation"], row["n_orders"], row["cents"])
         )
-    exits: list[tuple[int, int, int, int, int]] = []
-    survivors: set[int] | None = None
-    last = len(SH_BUDGET_MONTHS) - 1
-    for r in range(len(SH_BUDGET_MONTHS)):
-        cur = by_rung.get(r, [])
-        if survivors is not None:
-            cur = [t for t in cur if t[0] in survivors]
-        # rank by (metric desc, nation asc) — cents/n_orders is the
-        # identical long→double division Spark's window rank compared
-        ranked = sorted(cur, key=lambda t: (-(t[2] / t[1]), t[0]))
-        half = (len(ranked) + 1) // 2
-        if r < last:
-            survivors = {t[0] for t in ranked[:half]}
-            exits.extend(
-                (t[0], r, i + 1, t[1], t[2])
-                for i, t in enumerate(ranked)
-                if i + 1 > half
-            )
-        else:
-            exits.extend(
-                (t[0], r, i + 1, t[1], t[2])
-                for i, t in enumerate(ranked)
-            )
+    exits = _halving_exits(by_rung, len(SH_BUDGET_MONTHS))
     out = spark.createDataFrame(
         exits,
         "nation int, last_rung long, rank_at_exit long,"

@@ -11,6 +11,8 @@ import uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.batch import read_parquet
+
 # Bound on one run_available_now drain: far above any registry twin (a
 # few seconds at sf0.1), so only a hung query reaches it.
 AVAILABLE_NOW_TIMEOUT_S = 3600.0
@@ -292,7 +294,7 @@ def dynamic_rules_stream(
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        rules = spark.read.parquet(rules_path)
+        rules = read_parquet(spark, rules_path)
         out = batch_df.join(F.broadcast(rules), key, "left").withColumn(
             "batch_id", F.lit(batch_id)
         )

@@ -49,8 +49,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The streaming file source requires an explicit schema, but the
     driver has shipped ``ts`` under two different physical parquet
-    encodings across rounds (TIMESTAMP(NANOS) → read as a nanos long
-    via ``nanosAsLong``; TIMESTAMP(MICROS) → plain TimestampType).  A
+    encodings across rounds (TIMESTAMP(NANOS) → declared and read as a
+    nanos long; TIMESTAMP(MICROS) → plain TimestampType).  A
     hardcoded schema silently mis-scales one of them by 1000×, so this
     helper probes the parquet footer first and declares the matching
     schema — the single entry point every streaming-over-driver-data
@@ -75,12 +75,14 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # table out of the shared sf dir
         src, opts = sf_dir, {"pathGlobFilter": "events.parquet"}
     ts_type = pq.read_schema(probe).field("ts").type
+    # window and watermark operators read the session time zone when the
+    # plan runs, not when it is built, so this key stays set
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     cols = "event_id long, ts {}, user_id long, event_type string, value double, props string"
     if getattr(ts_type, "unit", None) == "ns" or str(ts_type) == "int64":
         # round-1 encoding: nanos epoch longs (ns exceed double precision
-        # — integer div, exactly as sources/batch.py does for batch)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        # — integer div, exactly as sources/batch.py does for batch); the
+        # declared bigint reads TIMESTAMP(NANOS) whatever nanosAsLong says
         sdf = file_stream(spark, src, schema=cols.format("long"), **opts)
         return sdf.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return file_stream(spark, src, schema=cols.format("timestamp"), **opts)

@@ -365,7 +365,7 @@ def test_edge_snapshot_fingerprint_invalidation(tmp_path):
     import os
     import shutil
 
-    from stream_processing_with_flink_study_spark.plans.queries_graph import (
+    from stream_processing_with_flink_study_spark.sources.snapshots import (
         _dataset_fingerprint,
     )
 
@@ -557,10 +557,8 @@ def test_graph_queries_match_oracle_both_sides_of_gate(
     spark, duck_medium, monkeypatch, name, gate
 ):
     from stream_processing_with_flink_study_spark import plans
-    from stream_processing_with_flink_study_spark.plans import (
-        queries_graph,
-        queries_graphdist,
-    )
+    from stream_processing_with_flink_study_spark.plans import queries_graphdist
+    from stream_processing_with_flink_study_spark.sources import snapshots
 
     from .conftest import SF_MEDIUM
     from .util import assert_matches_oracle
@@ -571,11 +569,10 @@ def test_graph_queries_match_oracle_both_sides_of_gate(
         for const in GATE_CONSTANTS:
             monkeypatch.setattr(graph, const, 0)
         monkeypatch.setattr(queries_graphdist, "BFS_LOCAL_EDGE_GATE", 0)
-        # per-process caches built at the default gates (the BFS levels,
-        # the BFS gate verdict) must not stand in for the forced run
-        monkeypatch.setattr(queries_graph, "_EDGE_SNAPSHOTS", {})
-        monkeypatch.setattr(queries_graph, "_SCRATCH", [])
-        monkeypatch.setattr(queries_graphdist, "_SYM_ARRAYS", {})
+        # snapshots built at the default gates (the BFS levels) must not
+        # stand in for the forced run
+        monkeypatch.setattr(snapshots, "_EDGE_SNAPSHOTS", {})
+        monkeypatch.setattr(snapshots, "_SCRATCH", [])
     try:
         assert_matches_oracle(
             plans.QUERIES[name](spark, SF_MEDIUM),
@@ -584,3 +581,73 @@ def test_graph_queries_match_oracle_both_sides_of_gate(
         )
     finally:
         spark.catalog.clearCache()
+
+
+# ---------------------------------------------------------------------------
+# The per-process memo of ``_collect_under_gate``: only frames that read
+# nothing but edge snapshots, deterministically, are collected once.
+# ---------------------------------------------------------------------------
+
+
+def _next_job(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def _jobs(spark, fn, *args):
+    before = _next_job(spark)
+    out = fn(*args)
+    return out, _next_job(spark) - before
+
+
+def _cosupplier(spark):
+    from stream_processing_with_flink_study_spark.plans.queries_graph import (
+        _cosupplier_edges,
+    )
+
+    from .conftest import SF_MEDIUM
+
+    return _cosupplier_edges(spark, SF_MEDIUM).select("src", "dst")
+
+
+def test_second_lpa_build_launches_no_job(spark):
+    from stream_processing_with_flink_study_spark import plans
+
+    from .conftest import SF_MEDIUM
+
+    lpa = plans.QUERIES["lpa_communities"]
+    first, _ = _jobs(spark, lpa, spark, SF_MEDIUM)
+    second, jobs = _jobs(spark, lpa, spark, SF_MEDIUM)
+    assert jobs == 0
+    assert sorted(second.collect()) == sorted(first.collect())
+
+
+def test_collect_memo_skips_table_and_nondeterministic_frames(spark, monkeypatch):
+    from stream_processing_with_flink_study_spark.sources import load_table
+
+    from .conftest import SF_SMALL
+
+    monkeypatch.setattr(graph, "_COLLECTED", {})
+    table = load_table(spark, SF_SMALL, "lineitem").select("l_orderkey", "l_partkey")
+    noisy = _cosupplier(spark).withColumn("r", F.rand(7))
+    for frame in (table, noisy):
+        for _ in range(2):
+            pdf, jobs = _jobs(spark, graph._collect_under_gate, frame, 10**9)
+            assert pdf is not None and jobs > 0  # counted and collected again
+    assert graph._COLLECTED == {}
+
+
+def test_collect_memo_gate_rows_are_part_of_the_key(spark, monkeypatch):
+    monkeypatch.setattr(graph, "_COLLECTED", {})
+    edges = _cosupplier(spark)
+    pdf, jobs = _jobs(spark, graph._collect_under_gate, edges, 10**9)
+    assert pdf is not None and jobs > 0
+    # a gate below the row count takes a fresh verdict
+    small, jobs = _jobs(spark, graph._collect_under_gate, edges, len(pdf) - 1)
+    assert small is None and jobs > 0
+    # both verdicts are kept, also for a new frame of the same plan
+    again, jobs = _jobs(spark, graph._collect_under_gate, _cosupplier(spark), 10**9)
+    assert again is pdf and jobs == 0
+    small, jobs = _jobs(spark, graph._collect_under_gate, edges, len(pdf) - 1)
+    assert small is None and jobs == 0
+    # a gate of 0 decides before any job
+    assert _jobs(spark, graph._collect_under_gate, edges, 0) == (None, 0)

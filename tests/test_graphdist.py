@@ -224,20 +224,31 @@ def test_brandes_local_matches_distributed(spark, monkeypatch):
 
 @pytest.mark.parametrize("gate", [0, 1])
 def test_sym_arrays_verdict_cached_above_gate(spark, monkeypatch, gate):
-    """The BFS gate's above-gate verdict (None) is cached like the
-    arrays: a second ``_copurchase_sym_arrays`` call launches no Spark
-    job.  At gate 1 the first verdict comes from a real count."""
+    """The BFS gate's above-gate verdict (None) is memoized like the
+    arrays (``operators.graph._collect_under_gate`` over the co-purchase
+    snapshot): a second decision launches no Spark job.  At gate 1 the
+    first verdict comes from a real count."""
+    from stream_processing_with_flink_study_spark.operators import graph
+    from stream_processing_with_flink_study_spark.plans.queries_graph import (
+        _copurchase_edges,
+    )
+
     from .conftest import SF_MEDIUM
 
     def next_job():
         return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
+    def verdict():
+        return queries_graphdist._local_sym_arrays(
+            _copurchase_edges(spark, SF_MEDIUM)
+        )
+
     monkeypatch.setattr(queries_graphdist, "BFS_LOCAL_EDGE_GATE", gate)
-    monkeypatch.setattr(queries_graphdist, "_SYM_ARRAYS", {})
+    monkeypatch.setattr(graph, "_COLLECTED", {})
     first = next_job()
-    assert queries_graphdist._copurchase_sym_arrays(spark, SF_MEDIUM) is None
+    assert verdict() is None
     if gate:
         assert next_job() > first  # the verdict took a count
     before = next_job()
-    assert queries_graphdist._copurchase_sym_arrays(spark, SF_MEDIUM) is None
+    assert verdict() is None
     assert next_job() == before

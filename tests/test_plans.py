@@ -65,12 +65,25 @@ def test_lookup_join_is_broadcast_not_shuffle(plan_of):
     assert "SortMergeJoin" not in plan
 
 
-def test_no_row_at_a_time_python(spark):
+def test_no_row_at_a_time_python(spark, monkeypatch):
     """No query may plan BatchEvalPython (row-at-a-time Python UDF) —
     Python stages must be Arrow-vectorized (ArrowEvalPython /
     FlatMapGroupsInPandas / MapInPandas).  The same pass checks that no
     query leaves session conf behind: the session is shared, so a
-    leaked key changes the plan of every later query."""
+    leaked key changes the plan of every later query.  It also counts
+    the parquet schema inferences: at most one per file set read."""
+    from collections import Counter
+
+    from stream_processing_with_flink_study_spark.sources import batch
+
+    inferred: list[str] = []
+    infer = batch._infer_schema
+
+    def counting_infer(spark_, path):
+        inferred.append(path)
+        return infer(spark_, path)
+
+    monkeypatch.setattr(batch, "_infer_schema", counting_infer)
     offenders, conf_leaks = [], []
     conf = dict(spark.conf.getAll)
     for name in sorted(plans.QUERIES):
@@ -83,6 +96,8 @@ def test_no_row_at_a_time_python(spark):
             conf = after
     assert not offenders, f"row-at-a-time Python UDFs in: {offenders}"
     assert not conf_leaks, f"session conf changed by: {conf_leaks}"
+    again = {p: n for p, n in Counter(inferred).items() if n > 1}
+    assert not again, f"schema inferred more than once: {again}"
 
 
 def test_conf_override_restores_and_serializes(spark):

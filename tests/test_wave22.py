@@ -152,6 +152,31 @@ def test_successive_halving_planted_cascade(spark, tmp_path):
     assert (got[0].last_rung, got[0].rank_at_exit) == (0, 6)
 
 
+def test_successive_halving_ranks_by_double_division(spark):
+    """The cascade ranks by Spark's long / long (both operands rounded
+    to double), not Python's exactly rounded int / int: above 2**53 the
+    two order this pair of configs differently."""
+    from pyspark.sql import functions as F
+
+    from stream_processing_with_flink_study_spark.plans.queries_mlprep import (
+        _halving_exits,
+    )
+
+    # (nation, n_orders, cents): int / int ties them at ...331.0, and
+    # the smaller nation wins; float / float puts nation 1 at ...330.5
+    cells = [(1, 3, 2**53 + 1), (2, 1, 3002399751580331)]
+    assert cells[0][2] / cells[0][1] == cells[1][2] / cells[1][1]
+    spark_order = [
+        r.nation
+        for r in spark.createDataFrame(cells, "nation long, n long, cents long")
+        .orderBy(F.desc(F.col("cents") / F.col("n")), "nation")
+        .collect()
+    ]
+    exits = _halving_exits({0: cells}, 1)
+    assert [e[0] for e in exits] == spark_order == [2, 1]
+    assert [e[2] for e in exits] == [1, 2]
+
+
 def test_scaling_law_fit_matches_python_replica(spark, tmp_path):
     """Independent pure-Python reimplementation on a 120-doc corpus
     over a FIXED 25-token vocabulary (mixed deterministically across
