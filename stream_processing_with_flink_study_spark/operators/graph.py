@@ -26,6 +26,15 @@ constant read at call time, and every collect-to-driver decision goes
 through :func:`_collect_under_gate`: count first, then collect, and
 only once per process for a frame that reads nothing but the immutable
 edge snapshots of :mod:`..sources.snapshots`.
+
+The driver kernels hand their output back as a local relation
+(:func:`_local_frame`: an Arrow ``createDataFrame`` of a non-empty
+pandas frame).  Spark folds a projection over a local relation into a
+new one at optimization time, so the query tails finish on the driver
+with Spark's own expression semantics and launch no job:
+:func:`top_by_score` cuts the top-k of a local result in Python, and
+the BFS-family tails in ``plans/queries_graphdist.py`` count and sort
+their levels in numpy.  Above the gates every tail stays a Spark plan.
 """
 
 from __future__ import annotations
@@ -197,20 +206,14 @@ def _union_find_labels(spark, pdf) -> DataFrame:
     """(id, comp) from the collected (id, nbr) rows — the exact output
     of the propagation: union-by-min-root keeps every root the minimum
     of its tree, so find(x) IS the min label the rounds converge to."""
-    import pandas as pd
-
     parent: dict[int, int] = {}
     for a, b in zip(pdf["id"].tolist(), pdf["nbr"].tolist()):
         ra, rb = _find(parent, a), _find(parent, b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    comp_rows = sorted((x, _find(parent, x)) for x in parent)
-    return spark.createDataFrame(
-        pd.DataFrame(comp_rows, columns=["id", "comp"]).astype("int64")
-        if comp_rows
-        else pd.DataFrame({"id": pd.Series(dtype="int64"),
-                           "comp": pd.Series(dtype="int64")}),
-        "id long, comp long",
+    ids = sorted(parent)
+    return _local_frame(
+        spark, {"id": ids, "comp": [_find(parent, x) for x in ids]}, "id long, comp long"
     )
 
 
@@ -269,14 +272,15 @@ def _propagated_labels(sym: DataFrame, max_iter: int) -> DataFrame:
 
 
 def _factorize(*cols):
-    """Shared dense codes for several id columns: (codes per column,
-    sorted ids).  Sorted, so code order is id order (LPA's smaller-label
-    tie-break), and any hashable id type works (textrank's words)."""
+    """Shared dense codes for several id columns (pandas Series or numpy
+    arrays): (codes per column, sorted ids).  Sorted, so code order is
+    id order (LPA's smaller-label tie-break, the BFS tails' id order),
+    and any hashable id type works (textrank's words)."""
     import numpy as np
     import pandas as pd
 
     codes, ids = pd.factorize(
-        np.concatenate([c.to_numpy() for c in cols]), sort=True
+        np.concatenate([np.asarray(c) for c in cols]), sort=True
     )
     bounds = np.cumsum([len(c) for c in cols])[:-1]
     return np.split(codes, bounds), ids
@@ -304,14 +308,66 @@ def _linear_rounds(s, d, coef, x, n, iters, base, scale):
 
 def _node_values(spark, ids, alive, x, id_type, col: str) -> DataFrame:
     """(id, ``col``) rows for the alive nodes, typed like the Spark path."""
-    import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     schema = StructType(
         [StructField("id", id_type), StructField(col, DoubleType())]
     )
+    return _local_frame(spark, {"id": ids[alive], col: x[alive]}, schema)
+
+
+def _local_frame(spark, columns: dict, schema) -> DataFrame:
+    """A frame of ``columns`` (name -> array or list, in ``schema`` order).
+    With Arrow on and at least one row it is a local relation: its
+    collect, and that of any projection over it, launches no job.  An
+    empty frame takes the row path with the explicit schema, so Arrow
+    never infers types from empty columns."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(columns), schema)
+
+
+def top_by_score(
+    nodes: DataFrame, project, score: str, key: str, n: int = 20
+) -> DataFrame:
+    """The first ``n`` rows of ``project(nodes, count)`` ordered by
+    (``score`` desc, ``key`` asc), as Spark's
+    ``orderBy(desc(score), asc(key)).limit(n)``; ``count`` is a
+    zero-argument callable giving the row count of ``nodes``.
+
+    When ``nodes`` is a local relation (a driver kernel's output), no
+    step launches a Spark job: the count is the length of its collect,
+    the projection's collect is folded into a local relation at
+    optimization (so ``round`` and the other expressions keep Spark's
+    semantics), and the rows are sorted in Python and handed back as a
+    new local relation, which the caller's collect reads without a job.
+    Python's sort agrees with Spark's on every non-null, non-NaN value:
+    ``-0.0`` and ``0.0`` tie in both and fall through to ``key``.  A
+    null or NaN in either sort column, or a frame that is not local
+    (above the gates, or a non-Arrow session), takes Spark's sort."""
+    if nodes.isLocal():
+        out = project(nodes, lambda: len(nodes.collect()))
+        rows = out.collect()
+        if all(_sortable(r[score]) and _sortable(r[key]) for r in rows):
+            rows.sort(key=lambda r: (-r[score], r[key]))
+            return _local_rows(nodes.sparkSession, rows[:n], out.schema)
+    else:
+        out = project(nodes, nodes.count)
+    return out.orderBy(F.desc(score), F.asc(key)).limit(n)
+
+
+def _sortable(v) -> bool:
+    return v is not None and v == v  # NaN != NaN
+
+
+def _local_rows(spark, rows: list, schema) -> DataFrame:
+    """Collected ``rows`` back as a frame of ``schema``; local as in
+    :func:`_local_frame`."""
+    import pandas as pd
+
     return spark.createDataFrame(
-        pd.DataFrame({"id": ids[alive], col: x[alive]}), schema
+        pd.DataFrame.from_records([tuple(r) for r in rows], columns=schema.names),
+        schema,
     )
 
 
@@ -734,7 +790,6 @@ def label_propagation(
     )
     if pdf is not None:
         import numpy as np
-        import pandas as pd
 
         (a, b), ids = _factorize(pdf["a"], pdf["b"])
         n = len(ids)
@@ -748,8 +803,9 @@ def label_propagation(
             first = np.diff(v, prepend=-1) != 0
             lab = np.empty_like(lab)
             lab[v[first]] = lv[first]
-        return edges.sparkSession.createDataFrame(
-            pd.DataFrame({"id": ids, "community": ids[lab]}),
+        return _local_frame(
+            edges.sparkSession,
+            {"id": ids, "community": ids[lab]},
             "id long, community long",
         )
     sym = edges.select(

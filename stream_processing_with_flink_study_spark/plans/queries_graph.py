@@ -23,11 +23,11 @@ Bench note: below ``operators.graph.LOCAL_CC_SYM_LIMIT`` symmetric edge
 rows (sf0.1's co-supplier graph has 486,754) PageRank, Katz
 and label propagation count the edge list, collect it, and iterate on
 the driver, so their wall is the edge derivation plus a count and a
-collect; the per-round Spark loops run only above the gate.  Measured
-on a 4-vCPU VM (perfbench ``graph_iter``, seed 1, sf0.01-shaped
-lineitem, traced warm passes): ``pagerank_cosupplier`` 0.37-0.52 s and
-``lpa_communities`` 0.21-0.27 s, against 2.20-2.38 s and 1.31-1.77 s
-for the per-round loops in a run just before.
+collect, both once per process over the edge snapshot; the per-round
+Spark loops run only above the gate.  The PageRank/PPR/Katz top-20
+tails then finish on the driver as well
+(:func:`..operators.graph.top_by_score`), so a warm query launches no
+Spark job.
 """
 
 from __future__ import annotations
@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..operators.graph import _local_rows
 from ..sources import load_table
 from ..sources.snapshots import _edge_snapshot
 from .registry import query
@@ -169,22 +170,37 @@ def pagerank_cosupplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges → every node has in- and out-degree ≥ 1, so there is no
     dangling-mass term.  Ranks are reported relative to uniform
     (``rank · N``) and Σ rank = 1 is unit-tested on hand graphs in
-    tests/test_graph.py."""
-    from ..operators.graph import pagerank
+    tests/test_graph.py.  The top-20 cut is
+    :func:`..operators.graph.top_by_score`: below the local gate the
+    ranks are a local relation, so the node count, the rounding and the
+    cut run on the driver and a warm build plus collect launches no
+    Spark job; above it, a count and Spark's orderBy/limit."""
+    from ..operators.graph import pagerank, top_by_score
 
+    ranks = pagerank(
+        _cosupplier_sym(spark, sf_dir), iters=PR_ITERS, damping=PR_DAMPING
+    )
+    return top_by_score(ranks, _rank_rel, "rank_rel", "s_suppkey")
+
+
+def _cosupplier_sym(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The symmetric (src, dst, w) co-supplier edge list."""
     edges = _cosupplier_edges(spark, sf_dir)
-    sym = edges.union(
+    return edges.union(
         edges.select(
             F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
         )
     )
-    ranks = pagerank(sym, iters=PR_ITERS, damping=PR_DAMPING)
-    n_nodes = ranks.count()  # already materialized by pagerank()
-    out = ranks.select(
+
+
+def _rank_rel(ranks: DataFrame, count) -> DataFrame:
+    """PageRank relative to uniform: ``round(rank · N, 5)`` with N the
+    node count (``count()``; below the local gate ``ranks`` is a local
+    relation and its count launches no job)."""
+    return ranks.select(
         F.col("id").alias("s_suppkey"),
-        F.round(F.col("rank") * n_nodes, 5).alias("rank_rel"),
+        F.round(F.col("rank") * count(), 5).alias("rank_rel"),
     )
-    return out.orderBy(F.desc("rank_rel"), F.asc("s_suppkey")).limit(20)
 
 
 @query(
@@ -231,11 +247,14 @@ SSSP_ROUNDS = 6
 
 def _sssp_oracle() -> str:
     """Unrolled bounded Bellman-Ford (min-plus semiring) — same
-    plain-CTE-chain trick as :func:`_pagerank_oracle`."""
+    plain-CTE-chain trick as :func:`_pagerank_oracle`.  Each round
+    references the previous one twice and the edge table once, so both
+    are MATERIALIZED: inlined, DuckDB re-derives the pair self-join in
+    2^k copies per round (over 5 GB at sf0.1)."""
     steps = []
     for k in range(1, SSSP_ROUNDS + 1):
         steps.append(f"""
-    d{k} AS (
+    d{k} AS MATERIALIZED (
       SELECT id, min(dist) AS dist FROM (
         SELECT id, dist FROM d{k - 1}
         UNION ALL
@@ -246,7 +265,7 @@ def _sssp_oracle() -> str:
     chain = ",".join(steps)
     return f"""
     WITH {_cosupplier_edges_sql()},
-    sym AS (
+    sym AS MATERIALIZED (
       SELECT src, dst, 1.0 / w AS cost FROM pairs
       UNION ALL
       SELECT dst AS src, src AS dst, 1.0 / w AS cost FROM pairs
@@ -527,12 +546,10 @@ def local_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return lcc_from_pairs(pairs)
 
 
-def link_scores_from_pairs(pairs: DataFrame) -> DataFrame:
-    """Scored NON-edges (a, b, cn, aa_r, jac) from a canonical
-    (src < dst) edge list — the candidate-generation + scoring stage of
-    ``link_prediction_scores``, shared with
-    tools/graph_scale_smoke.py's universe-independence check.
-    ``pairs`` should be persisted by the caller (fan-out + anti-join)."""
+def neighbour_sets(pairs: DataFrame) -> DataFrame:
+    """(u, arr) neighbour sets of a canonical (src < dst) edge list,
+    persisted and materialized: they feed both the candidate fan-out
+    and the degrees of :func:`link_scores_from_pairs`."""
     sym = pairs.union(
         pairs.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -541,7 +558,22 @@ def link_scores_from_pairs(pairs: DataFrame) -> DataFrame:
         .agg(F.collect_set("dst").alias("arr"))
         .persist()
     )
-    nbrs.count()  # materialize: feeds both the fan-out and the degrees
+    nbrs.count()
+    return nbrs
+
+
+def link_scores_from_pairs(
+    pairs: DataFrame, nbrs: DataFrame | None = None
+) -> DataFrame:
+    """Scored NON-edges (a, b, cn, aa_r, jac) from a canonical
+    (src < dst) edge list — the candidate-generation + scoring stage of
+    ``link_prediction_scores``, shared with
+    tools/graph_scale_smoke.py's universe-independence check.
+    ``pairs`` should be persisted by the caller (fan-out + anti-join).
+    ``nbrs`` is :func:`neighbour_sets` of ``pairs``, passed by a caller
+    that releases it once the scores are consumed; built here if None."""
+    if nbrs is None:
+        nbrs = neighbour_sets(pairs)
     deg = nbrs.select("u", F.size("arr").alias("d"))
     # 2-combinations of each neighbor set, packed (a<<32|b), a < b
     packed = F.flatten(
@@ -867,33 +899,27 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     far nodes report 0 — the oracle replays the same 6 unrolled rounds,
     so both engines agree on every digit of the rounded relative
     ranks."""
-    from ..operators.graph import pagerank
+    from ..operators import graph
 
-    edges = _cosupplier_edges(spark, sf_dir)
-    edges = edges.persist()
-    sym = edges.union(
-        edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-        )
-    )
-    seeds = [
-        r["src"]
-        for r in sym.select("src")
-        .distinct()
-        .orderBy("src")
-        .limit(PPR_SEEDS)
-        .collect()
-    ]
-    ranks = pagerank(
+    sym = _cosupplier_sym(spark, sf_dir)
+    # below the local gate the seeds come off pagerank's own collected
+    # edge list (the same memo entry), so no Spark job picks them
+    pdf = graph._collect_under_gate(sym, graph.LOCAL_CC_SYM_LIMIT)
+    if pdf is not None:
+        seeds = sorted(pdf["src"].unique().tolist())[:PPR_SEEDS]
+    else:
+        seeds = [
+            r["src"]
+            for r in sym.select("src")
+            .distinct()
+            .orderBy("src")
+            .limit(PPR_SEEDS)
+            .collect()
+        ]
+    ranks = graph.pagerank(
         sym, iters=PR_ITERS, damping=PR_DAMPING, seeds=seeds
     )
-    n_nodes = ranks.count()
-    out = ranks.select(
-        F.col("id").alias("s_suppkey"),
-        F.round(F.col("rank") * n_nodes, 5).alias("rank_rel"),
-    )
-    edges.unpersist()
-    return out.orderBy(F.desc("rank_rel"), F.asc("s_suppkey")).limit(20)
+    return graph.top_by_score(ranks, _rank_rel, "rank_rel", "s_suppkey")
 
 
 # --------------------------------------------------------------------------
@@ -978,6 +1004,8 @@ def link_prediction_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached projection); candidate scoring reuses
     :func:`link_scores_from_pairs` (neighbor-set fan-out, broadcast
     anti-join); metrics are scalar rollups of edge-list-sized frames.
+    The one stats row is collected at build time and returned as a
+    local relation, after the three persisted frames are released.
 
     Reference scope: keyed-state graph discussion, 정리/5주차.md."""
     li = (
@@ -1027,7 +1055,8 @@ def link_prediction_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_train = trp.count()  # materialize: 4 downstream references
     tep = pairs_of(lo.filter(F.col("d") >= split), 1)
     newp = tep.join(trp, ["src", "dst"], "left_anti")
-    scored = link_scores_from_pairs(trp)
+    nbrs = neighbour_sets(trp)
+    scored = link_scores_from_pairs(trp, nbrs)
     w = Window.orderBy(F.desc("aa_r"), F.asc("a"), F.asc("b"))
     top = (
         scored.withColumn("rn", F.row_number().over(w))
@@ -1057,7 +1086,12 @@ def link_prediction_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return stats
+    # the result is one row: collect it now, so the three persisted
+    # frames can be released before the query returns
+    rows = stats.collect()
+    for frame in (nbrs, trp, lo):
+        frame.unpersist()
+    return _local_rows(spark, rows, stats.schema)
 
 
 @query(
@@ -1443,25 +1477,25 @@ def katz_centrality_cosupplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     path is already wired.  α is an exact-integer-derived double, every
     round applies identical IEEE ops, and the final 5-decimal rounding
     sits far above the keyed-sum jitter."""
-    from ..operators.graph import katz_centrality
+    from ..operators.graph import katz_centrality, top_by_score
 
-    edges = _cosupplier_edges(spark, sf_dir).persist()
-    sym = edges.union(
-        edges.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-        )
+    scores = katz_centrality(
+        _cosupplier_sym(spark, sf_dir), iters=KATZ_ITERS, beta=KATZ_BETA
     )
-    scores = katz_centrality(sym, iters=KATZ_ITERS, beta=KATZ_BETA)
-    out = (
-        scores.select(
+    out = top_by_score(
+        scores,
+        lambda sc, _: sc.select(
             F.col("id").alias("s_suppkey"),
             F.round(F.col("score") - 1e-9, 5).alias("katz_score"),
-        )
-        .orderBy(F.desc("katz_score"), "s_suppkey")
-        .limit(20)
+        ),
+        "katz_score",
+        "s_suppkey",
     )
+    if scores.isLocal():
+        return out
+    # above the local gate: collect the top rows, then drop the
+    # checkpointed scores
     rows = out.collect()
-    edges.unpersist()
     scores.unpersist()
     return spark.createDataFrame(rows, out.schema)
 
@@ -1476,7 +1510,10 @@ TRUSS_ROUNDS = 3
 def _truss_round(prev: str, rnd: int) -> str:
     """One peel round: per-edge triangle support on the surviving
     subgraph (triangles enumerated on the oriented src<dst list; each
-    triangle supports all three of its edges), then drop weak edges."""
+    triangle supports all three of its edges), then drop weak edges.
+    The next round references ``keep`` five times, so it is
+    MATERIALIZED: inlined, the rounds multiply into a plan that needed
+    3.9 GB in DuckDB at sf0.01."""
     return f"""
 , tri{rnd} AS (
   SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
@@ -1491,7 +1528,7 @@ sup{rnd} AS (
     UNION ALL SELECT b, c FROM tri{rnd}
   ) GROUP BY src, dst
 ),
-keep{rnd} AS (
+keep{rnd} AS MATERIALIZED (
   SELECT e.src, e.dst
   FROM {prev} e JOIN sup{rnd} s
     ON e.src = s.src AND e.dst = s.dst

@@ -15,6 +15,20 @@ surface anywhere.  Sampled-source BFS (k seeds, bounded radius R) is
 the standard scale decomposition for centrality on large graphs —
 exact all-pairs Brandes is O(V·E) and never runs at 100 TB.
 
+Two regimes, one decision (:func:`_local_levels`, the
+:data:`BFS_LOCAL_EDGE_GATE` verdict of :func:`_local_sym_arrays`):
+
+* LOCAL, at or under the gate: the σ build, the Brandes backward pass
+  and all three tails run on the driver over the collected edge and
+  level arrays (both memoized per process over the snapshots), and
+  each query ends in a local relation — numpy counts, maxima and a
+  ``lexsort`` instead of Spark's groupBy/orderBy, with only the
+  rounding columns left as Spark expressions, which Spark folds into
+  the local relation.  A warm build plus collect launches no job.
+* DISTRIBUTED, above it (100 TB, the 10x overflow sweep): join-per-
+  round BFS, checkpointed Brandes level-joins, Spark aggregates and
+  sorts.
+
 Reference scope: iterative keyed state (정리/5주차.md); the graph
 family contract of ``plans/queries_graph.py``.
 """
@@ -24,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.graph import _collect_under_gate, _factorize, _local_frame
 from ..sources import load_table
 from ..sources.snapshots import _edge_snapshot
 from .queries_graph import _copurchase_edges, _cosupplier_edges
@@ -95,8 +110,6 @@ def _local_sym_arrays(sym: DataFrame):
     Brandes pass neither re-count nor re-collect."""
     import numpy as np
 
-    from ..operators.graph import _collect_under_gate
-
     pdf = _collect_under_gate(sym.select("src", "dst"), BFS_LOCAL_EDGE_GATE)
     if pdf is None:
         return None
@@ -104,6 +117,25 @@ def _local_sym_arrays(sym: DataFrame):
         pdf["src"].to_numpy(dtype=np.int64),
         pdf["dst"].to_numpy(dtype=np.int64),
     )
+
+
+def _local_levels(sym: DataFrame, b: DataFrame):
+    """The regime decision of every BFS-family tail: ``(edge arrays,
+    levels)`` under :data:`BFS_LOCAL_EDGE_GATE`, else None.  ``levels``
+    is ``b``'s (seed, node, dist, sigma) rows as pandas, collected
+    ungated — at most seeds × nodes rows, bounded by the gated edge
+    arrays — and, over the level snapshot, memoized per process like
+    the arrays."""
+    arrays = _local_sym_arrays(sym)
+    if arrays is None:
+        return None
+    return arrays, _collect_under_gate(b.select("seed", "node", "dist", "sigma"), None)
+
+
+def _level_columns(levels, *names):
+    import numpy as np
+
+    return (levels[c].to_numpy(dtype=np.int64) for c in names)
 
 
 def _bfs_sigma(
@@ -152,17 +184,14 @@ def _bfs_sigma_local(
     schema = "seed long, node long, dist long, sigma long"
     if not seed_ids:
         return spark.createDataFrame([], schema)
-    nodes = np.unique(
-        np.concatenate([src, dst, np.asarray(seed_ids, dtype=np.int64)])
+    (s_idx, d_idx, seed_idx), nodes = _factorize(
+        src, dst, np.asarray(seed_ids, dtype=np.int64)
     )
-    s_idx = np.searchsorted(nodes, src)
-    d_idx = np.searchsorted(nodes, dst)
     n = len(nodes)
     parts: list[pd.DataFrame] = []
-    for sd in seed_ids:
+    for sd, si in zip(seed_ids, seed_idx):
         dist = np.full(n, -1, dtype=np.int64)
         sigma = np.zeros(n, dtype=np.int64)
-        si = int(np.searchsorted(nodes, sd))
         dist[si] = 0
         sigma[si] = 1
         for r in range(1, rounds + 1):
@@ -294,23 +323,48 @@ def closeness_bfs_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact ints; both ratios are single fixed double expressions
     over them (c1 + c2/2 + c3/3 — bounded term count, no float
     sum-order surface)."""
-    _, _, b = _bfs_sigma(spark, sf_dir)
-    piv = (
-        b.filter(F.col("dist") > 0)
-        .groupBy("seed")
-        .agg(
-            *[
-                F.coalesce(
-                    F.sum(F.when(F.col("dist") == d, F.lit(1))), F.lit(0)
-                )
-                .cast("long")
-                .alias(f"c{d}")
-                for d in (1, 2, 3)
-            ]
+    sym, _, b = _bfs_sigma(spark, sf_dir)
+    return closeness_from(sym, b)
+
+
+def closeness_from(sym: DataFrame, b: DataFrame) -> DataFrame:
+    """(seed, n_reached, sum_dist, closeness, harmonic) in seed order
+    from the BFS levels ``b``; seeds that reached nothing are absent.
+    Under the BFS gate the per-distance counts are numpy bincounts of
+    the collected levels, built in seed order, so no Spark sort runs."""
+    local = _local_levels(sym, b)
+    if local is not None:
+        import numpy as np
+
+        seed, dist = _level_columns(local[1], "seed", "dist")
+        reached = dist > 0
+        seeds, inv = np.unique(seed[reached], return_inverse=True)
+        counts = {
+            f"c{d}": np.bincount(inv[dist[reached] == d], minlength=len(seeds))
+            for d in (1, 2, 3)
+        }
+        piv = _local_frame(
+            b.sparkSession,
+            {"seed": seeds, **counts},
+            "seed long, c1 long, c2 long, c3 long",
         )
-    )
+    else:
+        piv = (
+            b.filter(F.col("dist") > 0)
+            .groupBy("seed")
+            .agg(
+                *[
+                    F.coalesce(
+                        F.sum(F.when(F.col("dist") == d, F.lit(1))), F.lit(0)
+                    )
+                    .cast("long")
+                    .alias(f"c{d}")
+                    for d in (1, 2, 3)
+                ]
+            )
+        )
     c1, c2, c3 = (F.col(f"c{d}") for d in (1, 2, 3))
-    return piv.select(
+    out = piv.select(
         "seed",
         (c1 + c2 + c3).alias("n_reached"),
         (c1 + 2 * c2 + 3 * c3).alias("sum_dist"),
@@ -331,7 +385,8 @@ def closeness_bfs_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             + 0.0
         ).alias("harmonic"),
-    ).orderBy("seed")
+    )
+    return out if local is not None else out.orderBy("seed")
 
 
 @query(
@@ -353,7 +408,34 @@ def eccentricity_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     the classic sampled bounds they certify: max eccentricity over any
     node set lower-bounds the graph diameter, min upper-bounds the
     radius (the iFUB/sampling argument).  Pure integer hop counts."""
-    _, _, b = _bfs_sigma(spark, sf_dir)
+    sym, _, b = _bfs_sigma(spark, sf_dir)
+    return eccentricity_from(sym, b)
+
+
+def eccentricity_from(sym: DataFrame, b: DataFrame) -> DataFrame:
+    """(seed, ecc, diameter_lb, radius_ub) in seed order from the BFS
+    levels ``b``: under the BFS gate a numpy max per seed, built in
+    seed order; above it Spark aggregates, a broadcast cross join and
+    a sort."""
+    local = _local_levels(sym, b)
+    if local is not None:
+        import numpy as np
+
+        seed, dist = _level_columns(local[1], "seed", "dist")
+        seeds, inv = np.unique(seed, return_inverse=True)
+        ecc = np.zeros(len(seeds), dtype=np.int64)  # every seed has dist 0
+        np.maximum.at(ecc, inv, dist)
+        lb, ub = (ecc.max(), ecc.min()) if len(ecc) else (0, 0)
+        return _local_frame(
+            b.sparkSession,
+            {
+                "seed": seeds,
+                "ecc": ecc,
+                "diameter_lb": np.full(len(seeds), lb),
+                "radius_ub": np.full(len(seeds), ub),
+            },
+            "seed long, ecc long, diameter_lb long, radius_ub long",
+        )
     ecc = b.groupBy("seed").agg(F.max("dist").alias("ecc"))
     agg = ecc.agg(
         F.max("ecc").alias("diameter_lb"), F.min("ecc").alias("radius_ub")
@@ -416,90 +498,79 @@ def betweenness_fixed_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     return brandes_fixed_point_from(sym, b).limit(20)
 
 
-def _brandes_local(b: DataFrame, e_src, e_dst) -> DataFrame:
-    """Driver-side mirror of the distributed backward pass: per seed
-    and level, one vectorized exact-int64 ``(σ_v·(10⁶+δint_w)) // σ_w``
-    scatter-add over the Arrow-collected edge/level arrays.  Emits
-    (node, dint) rows for EXACTLY the (seed, node) groups the
-    distributed join emits (v nodes with ≥1 one-level-deeper
+def _brandes_local(spark: SparkSession, e_src, e_dst, levels) -> DataFrame:
+    """Driver-side mirror of the distributed backward pass and its
+    aggregate: per seed and level, one vectorized exact-int64
+    ``(σ_v·(10⁶+δint_w)) // σ_w`` scatter-add over the edge arrays and
+    the collected ``levels``, summed into one dense ``bet_int`` array.
+    A "scored" mask keeps EXACTLY the nodes of the (seed, node) groups
+    the distributed join emits (v nodes with ≥1 one-level-deeper
     neighbor — membership matters when 0-score rows reach the top-20
-    cut), so the downstream aggregate is identical bit for bit."""
+    cut), so the sums are identical bit for bit.  Returns (part_id,
+    bet_int) as a local relation ordered by (bet_int desc, part_id) —
+    a ``np.lexsort`` instead of Spark's groupBy and orderBy."""
     import numpy as np
-    import pandas as pd
 
-    from ..operators.graph import _collect_under_gate
-
-    spark = b.sparkSession
-    # ungated: the levels are bounded by the gated edge arrays
-    pdf_b = _collect_under_gate(b.select("seed", "node", "dist", "sigma"), None)
-    schema = "node long, dint long"
-    if not len(pdf_b):
-        return spark.createDataFrame([], schema)
-    nodes = np.unique(
-        np.concatenate(
-            [e_src, e_dst, pdf_b["node"].to_numpy(dtype=np.int64)]
-        )
+    seed, node, dist_l, sigma_l = _level_columns(
+        levels, "seed", "node", "dist", "sigma"
     )
-    s_idx = np.searchsorted(nodes, e_src)
-    d_idx = np.searchsorted(nodes, e_dst)
+    (s_idx, d_idx, l_idx), nodes = _factorize(e_src, e_dst, node)
     n = len(nodes)
-    out: list[pd.DataFrame] = []
-    for sd, sub in pdf_b.groupby("seed"):
+    bet = np.zeros(n, dtype=np.int64)
+    scored = np.zeros(n, dtype=bool)
+    for sd in np.unique(seed):
+        m = seed == sd
         dist = np.full(n, -1, dtype=np.int64)
         sigma = np.zeros(n, dtype=np.int64)
-        bi = np.searchsorted(nodes, sub["node"].to_numpy(dtype=np.int64))
-        dist[bi] = sub["dist"].to_numpy(dtype=np.int64)
-        sigma[bi] = sub["sigma"].to_numpy(dtype=np.int64)
+        dist[l_idx[m]] = dist_l[m]
+        sigma[l_idx[m]] = sigma_l[m]
         dint = np.zeros(n, dtype=np.int64)
         for r in (2, 1):
-            m = (dist[s_idx] == r) & (dist[d_idx] == r + 1)
-            sv = sigma[s_idx[m]]
-            sw = sigma[d_idx[m]]
-            dw = dint[d_idx[m]]
-            terms = (sv * (DELTA_SCALE + dw)) // sw
+            e = (dist[s_idx] == r) & (dist[d_idx] == r + 1)
+            v, w = s_idx[e], d_idx[e]
             acc = np.zeros(n, dtype=np.int64)
-            cnt = np.zeros(n, dtype=np.int64)
-            np.add.at(acc, s_idx[m], terms)
-            np.add.at(cnt, s_idx[m], 1)
-            emit = cnt > 0
-            out.append(
-                pd.DataFrame({"node": nodes[emit], "dint": acc[emit]})
-            )
+            np.add.at(acc, v, (sigma[v] * (DELTA_SCALE + dint[w])) // sigma[w])
+            scored[v] = True
+            bet += acc
             dint = acc  # nonzero only at dist==r nodes; coalesce ≡ 0
-    allp = pd.concat(out, ignore_index=True)
-    if not len(allp):
-        return spark.createDataFrame([], schema)
-    return spark.createDataFrame(allp, schema)
+    idx = np.flatnonzero(scored)  # ascending, so ascending part_id
+    idx = idx[np.lexsort((idx, -bet[idx]))]
+    return _local_frame(
+        spark,
+        {"part_id": nodes[idx], "bet_int": bet[idx]},
+        "part_id long, bet_int long",
+    )
 
 
 def brandes_fixed_point_from(sym: DataFrame, b: DataFrame) -> DataFrame:
     """Backward dependency accumulation in micro-unit integers over the
     (seed, node, dist, sigma) BFS levels; returns every scored node
-    ordered by (bet_int desc, part_id).  Same hybrid gate as
-    :func:`bfs_sigma_from`: at or under :data:`BFS_LOCAL_EDGE_GATE` sym
-    rows the two level-joins run as driver-side scatter-adds
-    (:func:`_brandes_local`); above it — 100 TB, 10x overflow sweep —
-    the distributed join+checkpoint rounds are unchanged."""
-    arrays = _local_sym_arrays(sym)
-    if arrays is not None:
-        allints = _brandes_local(b, *arrays)
+    ordered by (bet_int desc, part_id).  Same regime decision as the
+    other tails (:func:`_local_levels`): at or under
+    :data:`BFS_LOCAL_EDGE_GATE` sym rows the level-joins, the per-node
+    sum and the sort run on the driver (:func:`_brandes_local`) and
+    the result is a local relation, so a ``limit`` on it folds in too;
+    above it — 100 TB, 10x overflow sweep — the distributed
+    join+checkpoint rounds, groupBy and orderBy are unchanged."""
+    local = _local_levels(sym, b)
+    if local is not None:
+        bet = _brandes_local(b.sparkSession, *local[0], local[1])
     else:
-        allints = _brandes_distributed(sym, b)
-    return (
-        allints.groupBy("node")
-        .agg(F.sum("dint").cast("long").alias("bet_int"))
-        .select(
-            F.col("node").alias("part_id"),
-            "bet_int",
-            (
-                F.round(
-                    F.col("bet_int").cast("double") / DELTA_SCALE - 1e-9, 4
-                )
-                + 0.0
-            ).alias("betweenness"),
+        bet = (
+            _brandes_distributed(sym, b)
+            .groupBy("node")
+            .agg(F.sum("dint").cast("long").alias("bet_int"))
+            .select(F.col("node").alias("part_id"), "bet_int")
         )
-        .orderBy(F.desc("bet_int"), "part_id")
+    out = bet.select(
+        "part_id",
+        "bet_int",
+        (
+            F.round(F.col("bet_int").cast("double") / DELTA_SCALE - 1e-9, 4)
+            + 0.0
+        ).alias("betweenness"),
     )
+    return out if local is not None else out.orderBy(F.desc("bet_int"), "part_id")
 
 
 def _brandes_distributed(sym: DataFrame, b: DataFrame) -> DataFrame:

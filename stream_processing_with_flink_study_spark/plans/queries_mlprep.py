@@ -3441,7 +3441,9 @@ def _sh_oracle() -> str:
     vals = ", ".join(
         f"({r}, {m})" for r, m in enumerate(SH_BUDGET_MONTHS)
     )
-    metric = "g.cents * 1.0 / g.n_orders"
+    # the metric the query ranks by: long / long with both operands
+    # rounded to double first, as Spark divides
+    metric = "CAST(g.cents AS DOUBLE) / g.n_orders"
     stages = []
     prev = None
     for r in range(len(SH_BUDGET_MONTHS)):
@@ -3553,8 +3555,9 @@ def successive_halving_schedule(
     alphabet, so the cascade state is ~100 exact-int rows at ANY corpus
     size — never worth 4 sequential Spark window stages).  Metrics are
     Spark's long / long over exact int64 cents/counts (both rounded to
-    double, then divided); the oracle's DECIMAL-then-double form agrees
-    with it while cents stay below 2**53.  Rank ties break by nation."""
+    double, then divided), and the oracle divides the same two doubles,
+    so the engines rank alike at any cents value.  Rank ties break by
+    nation."""
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"

@@ -651,3 +651,149 @@ def test_collect_memo_gate_rows_are_part_of_the_key(spark, monkeypatch):
     assert small is None and jobs == 0
     # a gate of 0 decides before any job
     assert _jobs(spark, graph._collect_under_gate, edges, 0) == (None, 0)
+
+
+# ---------------------------------------------------------------------------
+# Below the gates the query tails finish on the driver: local relations,
+# no Spark job after the kernels.
+# ---------------------------------------------------------------------------
+LOCAL_TAIL_QUERIES = [
+    "pagerank_cosupplier",
+    "personalized_pagerank",
+    "katz_centrality_cosupplier",
+    "closeness_bfs_seeds",
+    "eccentricity_seeds",
+    "betweenness_fixed_point",
+]
+
+
+@pytest.mark.parametrize("name", LOCAL_TAIL_QUERIES)
+def test_warm_local_tail_launches_no_job(spark, name):
+    from stream_processing_with_flink_study_spark import plans
+
+    from .conftest import SF_MEDIUM
+
+    q = plans.QUERIES[name]
+    first = q(spark, SF_MEDIUM).collect()  # fills the snapshots and memo
+    rows, jobs = _jobs(spark, lambda: q(spark, SF_MEDIUM).collect())
+    assert jobs == 0
+    assert rows == first
+
+
+def _local_nodes(spark, rows):
+    import pandas as pd
+
+    frame = spark.createDataFrame(
+        pd.DataFrame.from_records(rows, columns=["id", "s"]), "id long, s double"
+    )
+    assert frame.isLocal()
+    return frame
+
+
+def _scored(nodes, count):
+    return nodes.select(
+        F.col("id").alias("k"), F.col("s").alias("score"), F.lit(count()).alias("n")
+    )
+
+
+def _bits(rows):
+    import struct
+
+    return [
+        (r.k, None if r.score is None else struct.pack(">d", r.score), r.n)
+        for r in rows
+    ]
+
+
+def _spark_top(nodes, n):
+    count = nodes.count()
+    return (
+        _scored(nodes, lambda: count)
+        .orderBy(F.desc("score"), F.asc("k"))
+        .limit(n)
+        .collect()
+    )
+
+
+def test_top_by_score_matches_spark_order_on_ties(spark):
+    # tie groups cut by n, and -0.0 interleaved with 0.0: Spark treats
+    # them as equal, so the id decides
+    rows = [
+        (5, 1.0), (3, 1.0), (9, 0.0), (2, -0.0), (7, -0.0),
+        (4, 0.0), (1, 2.5), (8, 1.0), (6, -1.0), (10, -0.0),
+    ]
+    nodes = _local_nodes(spark, rows)
+    for n in (1, 2, 4, 6, 20):
+        got, jobs = _jobs(
+            spark,
+            lambda: graph.top_by_score(nodes, _scored, "score", "k", n).collect(),
+        )
+        assert jobs == 0, n
+        assert _bits(got) == _bits(_spark_top(nodes, n)), n
+    assert [r.k for r in got] == [1, 3, 5, 8, 2, 4, 7, 9, 10, 6]
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [(1, float("nan")), (2, 1.0), (3, 1.0)],
+        [(1, None), (2, 1.0), (3, 0.5)],
+        [(None, 1.0), (2, 1.0), (3, 0.5)],
+    ],
+    ids=["nan-score", "null-score", "null-key"],
+)
+def test_top_by_score_null_or_nan_takes_spark_sort(spark, rows):
+    nodes = _local_nodes(spark, rows)
+    got, jobs = _jobs(
+        spark, lambda: graph.top_by_score(nodes, _scored, "score", "k", 2).collect()
+    )
+    assert jobs > 0  # Spark's orderBy().limit() ran
+    assert repr(got) == repr(_spark_top(nodes, 2))
+
+
+def test_rank_tails_on_empty_edge_list(spark, monkeypatch):
+    from stream_processing_with_flink_study_spark.plans import queries_graph
+
+    empty = spark.createDataFrame([], "src long, dst long, w long")
+    tails = {
+        "pagerank": lambda: graph.top_by_score(
+            graph.pagerank(empty), queries_graph._rank_rel, "rank_rel", "s_suppkey"
+        ),
+        "katz": lambda: graph.top_by_score(
+            graph.katz_centrality(empty),
+            lambda sc, _: sc.select(
+                F.col("id").alias("s_suppkey"),
+                F.round(F.col("score") - 1e-9, 5).alias("katz_score"),
+            ),
+            "katz_score",
+            "s_suppkey",
+        ),
+    }
+    for name, tail in tails.items():
+        local = tail()
+        dist = _spark_loop(monkeypatch, tail)
+        assert local.collect() == [] and dist.collect() == [], name
+        assert [(f.name, f.dataType) for f in local.schema] == [
+            (f.name, f.dataType) for f in dist.schema
+        ], name
+
+
+def _persisted_rdd_ids(spark) -> set[int]:
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keys().iterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(it.next())
+    return ids
+
+
+def test_link_prediction_eval_releases_what_it_persists(spark):
+    from stream_processing_with_flink_study_spark import plans
+
+    from .conftest import SF_SMALL
+
+    # compared as ids, not counts: the context cleaner may drop RDDs
+    # that earlier tests left behind while this one runs
+    before = _persisted_rdd_ids(spark)
+    rows = plans.QUERIES["link_prediction_eval"](spark, SF_SMALL).collect()
+    assert len(rows) == 1
+    assert _persisted_rdd_ids(spark) - before == set()

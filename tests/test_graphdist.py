@@ -252,3 +252,34 @@ def test_sym_arrays_verdict_cached_above_gate(spark, monkeypatch, gate):
     before = next_job()
     assert verdict() is None
     assert next_job() == before
+
+
+@pytest.mark.parametrize(
+    "pairs",
+    [
+        [(1, 2), (1, 3), (2, 4), (3, 4), (4, 5), (5, 6), (6, 7), (2, 3),
+         (100, 101), (101, 102)],
+        [],
+    ],
+    ids=["mixed", "empty"],
+)
+def test_bfs_tails_local_match_distributed(spark, monkeypatch, pairs):
+    """Each BFS-family tail gives the same rows, in the same order and
+    with the same column names and types, on the driver (a local
+    relation, no Spark sort) as on the distributed path — also when
+    the edge list is empty."""
+    from stream_processing_with_flink_study_spark.plans.queries_graphdist import (
+        closeness_from,
+        eccentricity_from,
+    )
+
+    sym = _sym(spark, pairs)
+    _, _, b = bfs_sigma_from(sym)
+    for tail in (closeness_from, eccentricity_from, brandes_fixed_point_from):
+        local = tail(sym, b)
+        dist = _forced(monkeypatch, tail, sym, b)
+        assert local.collect() == dist.collect(), tail.__name__
+        assert [(f.name, f.dataType) for f in local.schema] == [
+            (f.name, f.dataType) for f in dist.schema
+        ], tail.__name__
+        assert bool(pairs) == bool(local.collect()), tail.__name__

@@ -175,6 +175,32 @@ def test_successive_halving_ranks_by_double_division(spark):
     exits = _halving_exits({0: cells}, 1)
     assert [e[0] for e in exits] == spark_order == [2, 1]
     assert [e[2] for e in exits] == [1, 2]
+    # the DuckDB oracle, run end to end on orders that roll up to the
+    # same two cells in every rung, ranks them as Spark does (DuckDB's
+    # DECIMAL form of cents * 1.0 / n would put nation 1 first)
+    import duckdb
+
+    from stream_processing_with_flink_study_spark.plans.queries_mlprep import (
+        _sh_oracle,
+    )
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE customer AS SELECT * FROM "
+        "(VALUES (10, 1), (20, 2)) t(c_custkey, c_nationkey)"
+    )
+    price = "CAST('30023997515803.31' AS DECIMAL(18, 2))"  # 3002399751580331 cents
+    con.execute(
+        "CREATE TABLE orders AS SELECT * FROM (VALUES "
+        + ", ".join(
+            f"({k}, {c}, DATE '1995-01-02', {price})"
+            for k, c in ((1, 10), (2, 10), (3, 10), (4, 20))
+        )
+        + ") t(o_orderkey, o_custkey, o_orderdate, o_totalprice)"
+    )
+    oracle = con.execute(_sh_oracle()).fetchall()
+    assert [r[0] for r in oracle] == spark_order
+    con.close()
 
 
 def test_scaling_law_fit_matches_python_replica(spark, tmp_path):

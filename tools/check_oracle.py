@@ -10,7 +10,10 @@ names, and order-insensitive values.  Usage:
 from __future__ import annotations
 
 import argparse
+import atexit
+import shutil
 import sys
+import tempfile
 import time
 import traceback
 
@@ -24,8 +27,21 @@ from stream_processing_with_flink_study_spark.schemas import TABLES  # noqa: E40
 from stream_processing_with_flink_study_spark.session import get_spark  # noqa: E402
 
 
+# DuckDB's cap for one oracle connection.  Above it, operators spill
+# to a private temp dir (removed at exit) instead of growing the
+# process: uncapped, ``sssp_cosupplier`` at sf0.1 reached 5.5 GB RSS and
+# spilled into the working directory.
+DUCK_MEMORY_LIMIT = "3GB"
+
+
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
+    """An in-memory DuckDB connection with one view per table of
+    ``sf_dir``, bounded by :data:`DUCK_MEMORY_LIMIT`."""
+    spill = tempfile.mkdtemp(prefix="duck_oracle_")
+    atexit.register(shutil.rmtree, spill, ignore_errors=True)
+    con = duckdb.connect(
+        config={"memory_limit": DUCK_MEMORY_LIMIT, "temp_directory": spill}
+    )
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"

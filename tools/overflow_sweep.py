@@ -24,6 +24,14 @@ completion):
    the oracle-exact baseline next to their registered IVF twins) are
    explicitly allowlisted in ``DESIGNED_QUADRATIC`` with the reason.
 
+Both runs of a query take the same graph regime: every graph size gate
+is pinned to 0 for the whole sweep (``PINNED_GATES``), so the graph
+operators run their distributed loops at 1x as at ``--mult``x.
+Unpinned, the 1x run of a gated query would take the driver-side path
+and the big run the distributed one, and their ratio would measure the
+gate, not the scaling.  The regime is printed before the walls and
+recorded in the JSON line.
+
     python tools/overflow_sweep.py [--mult 10] [--top 20] [name ...]
 
 Opt-in CI stage: ``OVERFLOW_SWEEP=1 tools/ci.sh`` runs it after the
@@ -47,6 +55,8 @@ sys.path.insert(0, ".")
 from pyspark.sql import functions as F  # noqa: E402
 
 from stream_processing_with_flink_study_spark import plans  # noqa: E402
+from stream_processing_with_flink_study_spark.operators import graph  # noqa: E402
+from stream_processing_with_flink_study_spark.plans import queries_graphdist  # noqa: E402
 from stream_processing_with_flink_study_spark.session import get_spark  # noqa: E402
 from stream_processing_with_flink_study_spark.sources import load_table  # noqa: E402
 
@@ -138,6 +148,18 @@ SUPERLINEAR_FACTOR = 15.0
 #: … but only when the big wall is large enough to be signal, not
 #: fixed-overhead noise (a 0.4 s query finishing in 6 s is not a find).
 MIN_FAIL_WALL = 20.0
+#: module size gates set to 0 for both runs: the distributed regime
+PINNED_GATES = {
+    graph: (
+        "LOCAL_CC_SYM_LIMIT",
+        "BROADCAST_NODE_LIMIT",
+        "BROADCAST_EDGE_LIMIT",
+        "TRIANGLE_BROADCAST_EDGE_LIMIT",
+        "BORUVKA_TAIL_EDGE_LIMIT",
+    ),
+    queries_graphdist: ("BFS_LOCAL_EDGE_GATE",),
+}
+GRAPH_REGIME = "distributed (every graph size gate 0 in both runs)"
 KEYED = {
     "customer": ["c_custkey"],
     "supplier": ["s_suppkey"],
@@ -198,6 +220,10 @@ def main() -> int:
         names += [n for n in MOD_SAMPLED if n not in names]
         names = [n for n in names if n in plans.QUERIES]
 
+    for module, gates in PINNED_GATES.items():
+        for gate in gates:
+            setattr(module, gate, 0)
+    print(f"graph regime: {GRAPH_REGIME}")
     spark = get_spark("overflow-sweep")
     scratch = tempfile.mkdtemp(prefix="spfs_overflow_")
     atexit.register(shutil.rmtree, scratch, ignore_errors=True)
@@ -266,6 +292,7 @@ def main() -> int:
         json.dumps(
             {
                 "mult": args.mult,
+                "graph_regime": GRAPH_REGIME,
                 "n": len(names),
                 "failures": failures,
                 "failed_1x": failed_1x,

@@ -19,20 +19,12 @@ from __future__ import annotations
 import argparse
 import sys
 
-import duckdb
 import numpy as np
 
 sys.path.insert(0, ".")
 
 from stream_processing_with_flink_study_spark import plans  # noqa: E402
-from stream_processing_with_flink_study_spark.schemas import TABLES  # noqa: E402
-
-
-def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-    return con
+from tools.check_oracle import duck_connection  # noqa: E402
 
 
 def negative_zero_columns(df) -> list[str]:
