@@ -612,10 +612,10 @@ def knn_label_noise_ivf64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The label-noise screen at PRODUCTION index sizing (round-11
     verdict item 4): identical semantics to ``knn_label_noise_ivf``
     but on a 64-cell literal centroid bank — n_cells scaled with the
-    corpus, the sizing ``tools/ann_scale_smoke.py`` demonstrates holds
-    candidates flat.  Registering it under the full hash gate puts the
-    scaled configuration inside the correctness surface (both engines
-    rank the identical 64x64 int64 centroid bank), and it carries NO
+    corpus, the sizing BASELINE.md's "ANN scale smoke" section records
+    holding candidates flat.  Registering it under the full hash gate
+    puts the scaled configuration inside the correctness surface (both
+    engines rank the identical 64x64 int64 centroid bank), and it carries NO
     overflow-sweep exemption: with 4x the cells the candidate stage is
     a 16x smaller fraction of all-pairs, so its 10x wall must — and
     does — pass the superlinearity gate on merit."""

@@ -439,9 +439,8 @@ def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def lcc_from_pairs(pairs: DataFrame) -> DataFrame:
     """Per-node (degree, triangle count, local clustering coefficient)
-    from a canonical (src < dst) edge list — shared by the driver query
-    and tools/graph_scale_smoke.py's universe-independence check.
-    ``pairs`` should be persisted by the caller (4 plan references)."""
+    from a canonical (src < dst) edge list.  ``pairs`` should be
+    persisted by the caller (4 plan references)."""
     deg = (
         pairs.select(F.col("src").alias("s"))
         .union(pairs.select(F.col("dst").alias("s")))
@@ -562,18 +561,13 @@ def neighbour_sets(pairs: DataFrame) -> DataFrame:
     return nbrs
 
 
-def link_scores_from_pairs(
-    pairs: DataFrame, nbrs: DataFrame | None = None
-) -> DataFrame:
+def link_scores_from_pairs(pairs: DataFrame, nbrs: DataFrame) -> DataFrame:
     """Scored NON-edges (a, b, cn, aa_r, jac) from a canonical
     (src < dst) edge list — the candidate-generation + scoring stage of
-    ``link_prediction_scores``, shared with
-    tools/graph_scale_smoke.py's universe-independence check.
+    ``link_prediction_scores``, shared with ``link_prediction_eval``.
     ``pairs`` should be persisted by the caller (fan-out + anti-join).
-    ``nbrs`` is :func:`neighbour_sets` of ``pairs``, passed by a caller
-    that releases it once the scores are consumed; built here if None."""
-    if nbrs is None:
-        nbrs = neighbour_sets(pairs)
+    ``nbrs`` is :func:`neighbour_sets` of ``pairs``; the caller releases
+    both once the scores are consumed."""
     deg = nbrs.select("u", F.size("arr").alias("d"))
     # 2-combinations of each neighbor set, packed (a<<32|b), a < b
     packed = F.flatten(
@@ -696,7 +690,9 @@ def link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (node-sized).  The top-50 cut orders by the ROUNDED score with
     (a, b) tiebreak so the cut is engine-stable; Adamic-Adar terms are
     1/ln(integer) sums — never on a half-boundary, so round(·, 4)
-    absorbs summation-order jitter.
+    absorbs summation-order jitter.  The top 50 are collected at build
+    time and returned as a local relation, after the edge list and the
+    neighbour sets are released.
 
     Reference scope: keyed-state graph discussion, 정리/5주차.md."""
     pairs = (
@@ -706,9 +702,10 @@ def link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     pairs.count()  # materialize: feeds the fan-out AND the anti-join
-    scored = link_scores_from_pairs(pairs)
+    nbrs = neighbour_sets(pairs)
+    scored = link_scores_from_pairs(pairs, nbrs)
     w = Window.orderBy(F.desc("aa_r"), F.asc("a"), F.asc("b"))
-    return (
+    top = (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 50)
         .select(
@@ -719,6 +716,12 @@ def link_prediction_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("jac").alias("jaccard"),
         )
     )
+    # at most 50 rows: collect them now, so both persisted frames can
+    # be released before the query returns
+    rows = top.collect()
+    for frame in (nbrs, pairs):
+        frame.unpersist()
+    return _local_rows(spark, rows, top.schema)
 
 
 # --------------------------------------------------------------------------

@@ -14,13 +14,11 @@ row-count/schema/value parity the driver's gate checks at sf0.01.
 
 from __future__ import annotations
 
-import os
-
-import pyarrow.parquet as pq
 import pytest
 
 from stream_processing_with_flink_study_spark import plans
-from stream_processing_with_flink_study_spark.schemas import TABLES
+from tools.check_oracle import compare, duck_connection
+from tools.walk import build_empty_universe
 
 # The degenerate-risk family: bounded-collect replays, recursive state,
 # fitted denominators, %MOD eval slices.  Queries outside this list are
@@ -60,7 +58,7 @@ DEGENERATE_FAMILY = [
     "matryoshka_recall_eval",
     "mmr_diverse_topk",
     # the 40 divergences the round-12 FULL-registry sweep
-    # (tools/degenerate_sweep.py) found beyond the curated family —
+    # (tools/walk.py --empty) found beyond the curated family —
     # every one fixed and pinned here; the full sweep itself runs in
     # ci.sh, this keeps `pytest tests/` self-contained:
     "als_implicit_rank2",
@@ -109,18 +107,12 @@ DEGENERATE_FAMILY = [
 @pytest.fixture(scope="module")
 def empty_universe(tmp_path_factory):
     d = str(tmp_path_factory.mktemp("empty_universe"))
-    for t in TABLES:
-        tbl = pq.read_table(
-            f"/root/testdata/sf0.001/{t}.parquet"
-        ).slice(0, 0)
-        pq.write_table(tbl, os.path.join(d, f"{t}.parquet"))
+    build_empty_universe(d)
     return d
 
 
 @pytest.mark.parametrize("name", DEGENERATE_FAMILY)
 def test_empty_universe_parity(spark, empty_universe, name):
-    from tools.check_oracle import compare, duck_connection
-
     con = duck_connection(empty_universe)
     try:
         ok, msg = compare(

@@ -11,14 +11,10 @@ import pytest
 
 from stream_processing_with_flink_study_spark import plans
 from stream_processing_with_flink_study_spark.session import conf_override
+from tools import walk as walker
+from tools.walk import formatted_plan as fplan
 
 from .conftest import SF_SMALL
-
-
-def fplan(df) -> str:
-    jvm = df.sparkSession._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    return df._jdf.queryExecution().explainString(mode)
 
 
 @pytest.fixture(scope="module")
@@ -68,7 +64,8 @@ def test_lookup_join_is_broadcast_not_shuffle(plan_of):
 def test_no_row_at_a_time_python(spark, monkeypatch):
     """No query may plan BatchEvalPython (row-at-a-time Python UDF) —
     Python stages must be Arrow-vectorized (ArrowEvalPython /
-    FlatMapGroupsInPandas / MapInPandas).  The same pass checks that no
+    FlatMapGroupsInPandas / MapInPandas) — nor raise another flag of
+    the walker's plan audit.  The same pass checks that no
     query leaves session conf behind: the session is shared, so a
     leaked key changes the plan of every later query.  It also counts
     the parquet schema inferences: at most one per file set read."""
@@ -84,18 +81,11 @@ def test_no_row_at_a_time_python(spark, monkeypatch):
         return infer(spark_, path)
 
     monkeypatch.setattr(batch, "_infer_schema", counting_infer)
-    offenders, conf_leaks = [], []
-    conf = dict(spark.conf.getAll)
-    for name in sorted(plans.QUERIES):
-        plan = fplan(plans.QUERIES[name](spark, SF_SMALL))
-        if "BatchEvalPython" in plan:
-            offenders.append(name)
-        after = dict(spark.conf.getAll)
-        if after != conf:
-            conf_leaks.append(name)
-            conf = after
-    assert not offenders, f"row-at-a-time Python UDFs in: {offenders}"
-    assert not conf_leaks, f"session conf changed by: {conf_leaks}"
+    walked = walker.walk(
+        spark, sorted(plans.QUERIES), SF_SMALL, [walker.plan(), walker.conf(spark)]
+    )
+    failed = {name: msg for name, (ok, msg, _) in walked.items() if not ok}
+    assert not failed, f"plan flags or session conf changes: {failed}"
     again = {p: n for p, n in Counter(inferred).items() if n > 1}
     assert not again, f"schema inferred more than once: {again}"
 

@@ -15,37 +15,28 @@ after the final round on BOTH the Spark and DuckDB sides.
 
 from __future__ import annotations
 
-import sys
-from pathlib import Path
-
-import duckdb
-import numpy as np
 import pytest
 
-sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-
-from stream_processing_with_flink_study_spark import plans  # noqa: E402
-from stream_processing_with_flink_study_spark.schemas import TABLES  # noqa: E402
+from stream_processing_with_flink_study_spark import plans
+from tools.check_oracle import duck_connection
+from tools.signbit_sweep import negative_zero_columns
 
 from .conftest import SF_MEDIUM, SF_SMALL
 
 
 @pytest.mark.parametrize("sf_dir", [SF_SMALL, SF_MEDIUM])
 def test_no_negative_zero_in_any_oracle(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    hits = []
-    for name in sorted(plans.ORACLES):
-        df = con.execute(plans.ORACLES[name]).fetch_df()
-        for c in df.columns:
-            if str(df[c].dtype).startswith("float"):
-                v = df[c].to_numpy(dtype="float64", na_value=np.nan)
-                if bool(np.any((v == 0.0) & np.signbit(v))):
-                    hits.append(f"{name}.{c}")
-    con.close()
+    con = duck_connection(sf_dir)
+    try:
+        hits = [
+            f"{name}.{c}"
+            for name in sorted(plans.ORACLES)
+            for c in negative_zero_columns(
+                con.execute(plans.ORACLES[name]).fetch_df()
+            )
+        ]
+    finally:
+        con.close()
     assert not hits, (
         f"negative zero in oracle output at {sf_dir}: {hits} — append "
         "'+ 0.0' after the final round() on BOTH engine sides"

@@ -1,10 +1,11 @@
 """Local replica of the driver's correctness gate.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB at the given scale factor, then compares row count, sorted column
-names, and order-insensitive values.  Usage:
+:func:`compare` checks a query's Spark result against its
+``oracle_sql()`` twin on DuckDB: row count, sorted column names, and
+order-insensitive values.  ``tools/walk.py --checks oracle`` runs it over
+the registry:
 
-    python tools/check_oracle.py [--sf /root/testdata/sf0.01] [name ...]
+    python tools/walk.py [--sf /root/testdata/sf0.01] [name ...]
 """
 
 from __future__ import annotations
@@ -99,31 +100,3 @@ def compare(name: str, spark_df, con, sql: str | None) -> tuple[bool, str]:
             )
     return True, f"{len(s)} rows"
 
-
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="*")
-    ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    args = ap.parse_args()
-
-    spark = get_spark("check_oracle")
-    con = duck_connection(args.sf)
-    names = args.names or list(plans.QUERIES)
-    failures = 0
-    for name in names:
-        fn = plans.QUERIES[name]
-        sql = plans.ORACLES.get(name)
-        t0 = time.time()
-        try:
-            ok, msg = compare(name, fn(spark, args.sf), con, sql)
-        except Exception:
-            ok, msg = False, traceback.format_exc(limit=10)
-        dt = time.time() - t0
-        print(f"{'PASS' if ok else 'FAIL'} {name:32s} {dt:6.2f}s  {msg}")
-        failures += 0 if ok else 1
-    print(f"\n{len(names) - failures}/{len(names)} passed")
-    return 1 if failures else 0
-
-
-if __name__ == "__main__":
-    sys.exit(main())

@@ -6,16 +6,16 @@
 # Chain (fail-fast — a red stage stops the run):
 #   1. tools/run_gate.sh N        — full pytest gate, N parallel shards
 #                                   (every registered query vs DuckDB at
-#                                   sf0.01 + all law/property suites)
-#   2. tools/signbit_sweep.py     — IEEE -0.0 divergence sweep, every
-#                                   oracle at sf0.001 AND sf0.01
-#   3. tools/sf01_sweep.py        — bench-scale (sf0.1) full-evaluation
+#                                   sf0.01, the -0.0 sweep of every
+#                                   oracle at sf0.001 and sf0.01, and
+#                                   all law/property suites)
+#   2. walk.py --checks evaluate  — bench-scale (sf0.1) full-evaluation
 #                                   pre-pass (catches ANSI overflows the
 #                                   sf0.01 gate can't see)
-#   4. tools/explain_audit.py     — static plan audit over every
+#   3. walk.py --checks plan      — static plan audit over every
 #                                   registered query (scan blowups,
 #                                   row-path Python UDFs, pruning)
-#   5. tools/degenerate_sweep.py  — ALL registered queries + oracles on
+#   4. walk.py --empty            — ALL registered queries + oracles on
 #                                   a fully-empty schema-preserved
 #                                   universe (row/schema/value parity).
 #                                   Found 40 real divergences when first
@@ -24,7 +24,7 @@
 #                                   NULL-bool stringification, and the
 #                                   Spark-vs-SQL-standard empty-rollup
 #                                   gap.  Skip with DEGENERATE_SWEEP=0.
-#   6. tools/overflow_sweep.py    — top-20 heaviest bench queries PLUS
+#   5. tools/overflow_sweep.py    — top-20 heaviest bench queries PLUS
 #                                   every %MOD-fraction-sampled query
 #                                   on a 10x-salted universe.  Since
 #                                   round 11 it FAILS on superlinearity
@@ -36,7 +36,12 @@
 #                                   reasons).  It caught matryoshka in
 #                                   r8 and would have caught mmr in r9
 #                                   and the jl/semdecon/mmd trio in
-#                                   r10.  Skip with OVERFLOW_SWEEP=0.
+#                                   r10.  Its REPLICATION_LAW queries
+#                                   must emit exactly 10x their 1x rows.
+#                                   Skip with OVERFLOW_SWEEP=0.
+#
+# The deep -0.0 pass, `tools/signbit_sweep.py --sf /root/testdata/sf0.1`,
+# runs once per round outside this chain.
 #
 # Keep the host quiet (no concurrent Spark/pytest) — contention slows
 # the gate ~2x and pollutes any timing you take afterwards.  The bench
@@ -56,11 +61,10 @@ run() {
 }
 
 run tools/run_gate.sh "${1:-4}"
-run python tools/signbit_sweep.py
-run python tools/sf01_sweep.py
-run python tools/explain_audit.py
+run python tools/walk.py --sf /root/testdata/sf0.1 --checks evaluate
+run python tools/walk.py --checks plan
 if [ "${DEGENERATE_SWEEP:-1}" = "1" ]; then
-  run python tools/degenerate_sweep.py
+  run python tools/walk.py --empty --checks oracle
 fi
 if [ "${OVERFLOW_SWEEP:-1}" = "1" ]; then
   run python tools/overflow_sweep.py

@@ -6,11 +6,11 @@ crash) or a quadratic blowup that only detonates at the NEXT order of
 magnitude.  This tool materializes a 10× universe from sf0.1 — every
 fact table replicated with disjoint salted key spaces (offset 1e7 per
 copy), document tokens salted per copy so near-dup stays within-copy
-(the tools/scale_smoke.py lesson), dimensions shared — then fully
-evaluates the top-N heaviest bench queries against it via the noop
-writer.
+(as the deleted dedup scale smoke found), dimensions shared — then
+fully evaluates the top-N heaviest bench queries against it via the
+noop writer, through ``tools/walk.py``.
 
-Two failure criteria (round-10 verdict item 2 — the round-10 sweep
+Three failure criteria (round-10 verdict item 2 — the round-10 sweep
 "passed" while measuring 51-108x walls, because it only checked
 completion):
 
@@ -23,6 +23,10 @@ completion):
    Queries that are quadratic BY DESIGN (the brute kNN tier, kept as
    the oracle-exact baseline next to their registered IVF twins) are
    explicitly allowlisted in ``DESIGNED_QUADRATIC`` with the reason.
+3. **Replication law** — disjoint salted copies multiply the output:
+   each ``REPLICATION_LAW`` query must emit exactly ``mult`` times its
+   1x row count.  The rows are counted by a ``DataFrame.observe`` on
+   the noop write, so the count launches no job of its own.
 
 Both runs of a query take the same graph regime: every graph size gate
 is pinned to 0 for the whole sweep (``PINNED_GATES``), so the graph
@@ -34,8 +38,8 @@ recorded in the JSON line.
 
     python tools/overflow_sweep.py [--mult 10] [--top 20] [name ...]
 
-Opt-in CI stage: ``OVERFLOW_SWEEP=1 tools/ci.sh`` runs it after the
-plan audit.  Exit status non-zero on any failure.  Scratch parquet is
+``tools/ci.sh`` runs it last (``OVERFLOW_SWEEP=0`` skips it).  Exit
+status non-zero on any failure.  Scratch parquet is
 written under a self-deleting temp dir (~200 MB at mult=10).
 """
 
@@ -48,10 +52,10 @@ import shutil
 import sys
 import tempfile
 import time
-import traceback
 
 sys.path.insert(0, ".")
 
+from pyspark.sql import Observation  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from stream_processing_with_flink_study_spark import plans  # noqa: E402
@@ -59,6 +63,7 @@ from stream_processing_with_flink_study_spark.operators import graph  # noqa: E4
 from stream_processing_with_flink_study_spark.plans import queries_graphdist  # noqa: E402
 from stream_processing_with_flink_study_spark.session import get_spark  # noqa: E402
 from stream_processing_with_flink_study_spark.sources import load_table  # noqa: E402
+from tools.walk import evaluate, walk  # noqa: E402
 
 OFF = 10_000_000  # copy key offset: max base key ~6e5, 10 copies < 2^31
 
@@ -124,17 +129,17 @@ DESIGNED_QUADRATIC = {
     # 16-centroid index so their oracles stay cross-engine exact; a
     # FIXED cell count means cell size grows with the corpus, so the
     # as-registered twins are O(N^2/16) — still 6x less work than
-    # brute and bounded per-probe.  tools/ann_scale_smoke.py
-    # demonstrates the production configuration (n_cells scaled with
-    # the corpus) holds candidate counts flat and walls ~linear.
+    # brute and bounded per-probe.  BASELINE.md's "ANN scale smoke"
+    # section records that the production configuration (n_cells scaled
+    # with the corpus) holds candidate counts flat and walls ~linear.
     "knn_label_noise_ivf": "fixed 16-cell literal index; scaled-cell "
-    "configuration proven ~linear in tools/ann_scale_smoke.py",
+    "configuration recorded ~linear in BASELINE.md's ANN scale smoke",
     "knn_hubness_stats_ivf": "fixed 16-cell literal index; scaled-cell "
-    "configuration proven ~linear in tools/ann_scale_smoke.py",
+    "configuration recorded ~linear in BASELINE.md's ANN scale smoke",
     "smote_oversample_plan_ivf": "fixed 16-cell literal index; scaled-cell "
-    "configuration proven ~linear in tools/ann_scale_smoke.py",
+    "configuration recorded ~linear in BASELINE.md's ANN scale smoke",
     "semantic_decontaminate_ivf": "fixed 16-cell literal index; scaled-cell "
-    "configuration proven ~linear in tools/ann_scale_smoke.py",
+    "configuration recorded ~linear in BASELINE.md's ANN scale smoke",
     # Same fixed-index caveat, 2-D form: the LOF grid's cell side is a
     # baked literal (oracle needs integer-exact cell ids), so per-cell
     # population grows with the corpus; production shrinks the side
@@ -142,6 +147,18 @@ DESIGNED_QUADRATIC = {
     "lof_grid_outliers": "fixed grid-side literal; production scales the "
     "cell side with density (same class as the IVF twins)",
 }
+
+# Always swept: queries whose output is one row per node or key of the
+# salted tables, so disjoint copies multiply their row count exactly.
+REPLICATION_LAW = [
+    # one row per supplier or per node of the co-supplier graph, whose
+    # edges replicate exactly under the salted order and supplier keys
+    "lpa_communities",
+    "local_clustering_coeff",
+    # one row per clustered document: salted tokens keep every
+    # candidate pair inside its copy
+    "near_dup_clusters",
+]
 
 #: mult-x wall must stay under FACTOR * (mult/10) * 1x wall …
 SUPERLINEAR_FACTOR = 15.0
@@ -186,7 +203,7 @@ def build_universe(spark, sf: str, mult: int, out: str) -> None:
         if name == "documents":
             # salt every token with the copy index: copies must not be
             # near-dups of each other or pair generation turns
-            # quadratic in mult (scale_smoke.py lesson)
+            # quadratic in mult
             df = df.withColumn(
                 "text",
                 F.array_join(
@@ -200,6 +217,18 @@ def build_universe(spark, sf: str, mult: int, out: str) -> None:
                 ),
             )
         df.drop("_c").write.mode("overwrite").parquet(f"{out}/{name}.parquet")
+
+
+def counted(rows: dict[str, int]):
+    """The walker's ``evaluate`` check, recording each query's row count
+    in ``rows`` through an observation on the same noop write."""
+
+    def check(name, df):
+        seen = Observation()
+        evaluate(name, df.observe(seen, F.count(F.lit(1)).alias("rows")))
+        rows[name] = seen.get["rows"]
+
+    return check
 
 
 def main() -> int:
@@ -217,7 +246,7 @@ def main() -> int:
         names = [
             n for n, _ in sorted(benched.items(), key=lambda kv: -kv[1])
         ][: args.top]
-        names += [n for n in MOD_SAMPLED if n not in names]
+        names += [n for n in MOD_SAMPLED + REPLICATION_LAW if n not in names]
         names = [n for n in names if n in plans.QUERIES]
 
     for module, gates in PINNED_GATES.items():
@@ -231,45 +260,35 @@ def main() -> int:
     build_universe(spark, args.sf, args.mult, scratch)
     print(f"built {args.mult}x universe in {time.time() - t0:.1f}s: {scratch}")
 
-    def run_once(name: str, data_dir: str) -> float:
-        t0 = time.time()
-        df = plans.QUERIES[name](spark, data_dir)
-        df.write.format("noop").mode("overwrite").save()
-        return time.time() - t0
-
     # 1x reference walls, same session (same JVM warmth as the big run).
-    # A 1x exception is a FAILURE in its own right (round-11 ADVICE): a
-    # query that errors at 1x but happens to complete under MIN_FAIL_WALL
-    # at 10x would otherwise slip through green with no superlinearity
-    # reference at all.
-    walls_1x: dict[str, float] = {}
-    failed_1x: list[str] = []
-    for name in names:
-        try:
-            walls_1x[name] = round(run_once(name, args.sf), 2)
-            print(f"1x   {name:34s} {walls_1x[name]:6.1f}s")
-        except Exception:
-            print(f"1x FAIL {name:31s} — red regardless of the big run")
-            traceback.print_exc(limit=6)
-            failed_1x.append(name)
-        finally:
-            spark.catalog.clearCache()
+    # A 1x exception is a FAILURE in its own right: a query that errors
+    # at 1x but happens to complete under MIN_FAIL_WALL at 10x would
+    # otherwise slip through green with no superlinearity reference.
+    rows_1x: dict[str, int] = {}
+    rows: dict[str, int] = {}
+    ran_1x = walk(spark, names, args.sf, [counted(rows_1x)])
+    failed_1x = [n for n, (ok, _, _) in ran_1x.items() if not ok]
+    walls_1x = {n: round(w, 2) for n, (ok, _, w) in ran_1x.items() if ok}
+    ran = walk(spark, names, scratch, [counted(rows)])
 
     bound_factor = SUPERLINEAR_FACTOR * args.mult / 10.0
-    failures, superlinear, walls = len(failed_1x), [], {}
-    for name in names:
-        t0 = time.time()
-        try:
-            walls[name] = round(run_once(name, scratch), 1)
-        except Exception:
-            print(f"FAIL {name:34s} {time.time() - t0:6.1f}s")
-            traceback.print_exc(limit=6)
+    failures, superlinear, walls, unreplicated = len(failed_1x), [], {}, []
+    for name, (ok, _, wall) in ran.items():
+        if not ok:
             if name not in failed_1x:  # already counted once
                 failures += 1
             continue
-        finally:
-            spark.catalog.clearCache()
+        walls[name] = round(wall, 1)
         ratio = walls[name] / max(walls_1x.get(name, 0.0), 0.1)
+        if name in REPLICATION_LAW and name in rows_1x and (
+            rows[name] != args.mult * rows_1x[name]
+        ):
+            print(
+                f"ROWS {name:34s} {rows[name]} rows != {args.mult} x "
+                f"{rows_1x[name]} at 1x"
+            )
+            unreplicated.append(name)
+            failures += 1
         if name in DESIGNED_QUADRATIC:
             print(
                 f"OK   {name:34s} {walls[name]:6.1f}s ({ratio:5.1f}x, "
@@ -297,6 +316,12 @@ def main() -> int:
                 "failures": failures,
                 "failed_1x": failed_1x,
                 "superlinear": superlinear,
+                "unreplicated": unreplicated,
+                "rows_1x_and_mult": {
+                    n: [rows_1x.get(n), rows.get(n)]
+                    for n in REPLICATION_LAW
+                    if n in names
+                },
                 "walls_1x_s": walls_1x,
                 "walls_s": walls,
             }
